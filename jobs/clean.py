@@ -300,10 +300,13 @@ def main() -> None:
         )
     mojibake_fixed = 0
     if args.fix_mojibake:
-        texts = TS.fix_mojibake(texts)
+        # persist the flagged frame: the count and every later stage then
+        # share one extract+render pass (the drop reads from the cache)
+        texts = TS.fix_mojibake(texts).persist()
         mojibake_fixed = texts.filter("mojibake_fixed").count()
         texts = texts.drop("mojibake_fixed")
-    texts = texts.persist()
+    else:
+        texts = texts.persist()
 
     qmodel = None
     qthreshold = args.quality_threshold

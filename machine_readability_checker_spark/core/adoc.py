@@ -336,14 +336,3 @@ def extract_adoc_tables(content: bytes) -> List[List[List[str]]]:
         return grids
     except Exception:
         return []
-
-
-def parse_adoc(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="adoc")
-    spans, err = extract_adoc_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

@@ -880,15 +880,3 @@ def write_doc(
 
     return write_streams({"WordDocument": bytes(word),
                           table_stream: bytes(table)})
-
-
-def parse_doc(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc like the
-    docx/pdf lanes."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="doc")
-    spans, err = extract_doc_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

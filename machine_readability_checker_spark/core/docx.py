@@ -135,18 +135,6 @@ def extract_docx_spans(
     return spans, None
 
 
-def parse_docx(content: bytes):
-    """ParsedDoc facade for the format dispatcher (grid lane stays
-    None, like html/pdf)."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="docx")
-    spans, err = extract_docx_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc
-
-
 # ------------------------------------------------------- fixture writer
 
 

@@ -126,17 +126,6 @@ def extract_eml_spans(
         return [], f"eml parse failed: {e}"
 
 
-def parse_eml(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="eml")
-    spans, err = extract_eml_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc
-
-
 # ------------------------------------------------------------- fixtures
 
 

@@ -91,7 +91,7 @@ def parse_epub(content: bytes):
     except Exception as e:
         doc.parse_error = f"epub parse failed: {e}"
         return doc
-    doc.layout_spans = spans  # type: ignore[attr-defined]
+    doc.layout_spans = spans
     return doc
 
 

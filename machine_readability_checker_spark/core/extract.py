@@ -20,7 +20,7 @@ from typing import Any, Dict, List, Optional
 
 from . import cells as C
 from .checks import run_checks
-from .grid import GRID_FORMATS, ParsedDoc, parse_document
+from .grid import ParsedDoc, parse_document
 from .zones import ZoneContext, extract_zones, is_empty_cell
 
 Span = Dict[str, Any]
@@ -83,17 +83,10 @@ def extract_document(
     format_flags: Optional[int] = None
     layout: Optional[str] = None
 
-    if doc.parse_error is None and doc.fmt in (
-        "html", "pdf", "docx", "pptx", "rtf", "odt", "epub", "md",
-        "ipynb", "srt", "vtt", "tex", "doc", "wiki", "hocr", "ppt",
-        "eml", "rst", "adoc", "org", "txt",
-    ):
-        layout_triples = getattr(doc, "html_spans", None) or getattr(
-            doc, "layout_spans", []
-        )
-        for kind, text, media_ref in layout_triples:
+    if doc.parse_error is None and doc.layout_spans is not None:
+        for kind, text, media_ref in doc.layout_spans:
             spans.append(_mk_span(kind, text, media_ref, len(spans)))
-    elif doc.parse_error is None and doc.fmt in GRID_FORMATS:
+    elif doc.parse_error is None:
         eff_sheet = (
             sheet_idx if doc.sheets and 0 <= sheet_idx < len(doc.sheets) else 0
         )

@@ -202,14 +202,3 @@ def render_fw_table(grid: List[List[str]], gutter: int = 2) -> str:
                 (" " * gutter).join("-" * w for w in widths).rstrip()
             )
     return "\n".join(lines) + "\n"
-
-
-def parse_txt(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="txt")
-    spans, err = extract_txt_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

@@ -217,17 +217,6 @@ def extract_hocr_spans(
         return [], f"hocr parse failed: {e}"
 
 
-def parse_hocr(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="hocr")
-    spans, err = extract_hocr_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc
-
-
 # ------------------------------------------------------------- fixtures
 
 

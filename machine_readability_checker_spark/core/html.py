@@ -760,7 +760,7 @@ def table_grid_to_csv(grid: List[List[str]]) -> bytes:
 
 
 def parse_html(content: bytes, charset_hint: str = "", context: bool = False):
-    """ParsedDoc facade for the format dispatcher (grid lane stays None).
+    """HTML bytes → layout-lane ParsedDoc carrying the sniffed encoding.
     ``context`` selects the jusText-style block classifier."""
     from .grid import ParsedDoc
 
@@ -768,9 +768,7 @@ def parse_html(content: bytes, charset_hint: str = "", context: bool = False):
     try:
         spans, enc = extract_html_spans(content, charset_hint, context)
         doc.encoding = enc
-        doc.raw_text = None
-        doc.html_spans = spans  # type: ignore[attr-defined]
+        doc.layout_spans = spans
     except Exception as e:  # defensive: malformed HTML must not kill a batch
         doc.parse_error = f"html parse failed: {e}"
-        doc.html_spans = []  # type: ignore[attr-defined]
     return doc

@@ -200,14 +200,3 @@ def extract_ipynb_spans(
         return spans, None
     except Exception as e:  # defensive: never kill a batch
         return [], f"ipynb parse failed: {e}"
-
-
-def parse_ipynb(content: bytes):
-    """ParsedDoc facade for the format dispatcher."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="ipynb")
-    spans, err = extract_ipynb_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

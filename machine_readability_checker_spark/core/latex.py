@@ -499,14 +499,3 @@ def extract_latex_tables(content: bytes) -> List[List[List[str]]]:
         for _env, inner in _env_iter(body, _TABULAR_ENVS)
         if (g := _split_tabular_rows(_strip_tabular_spec(inner)))
     ]
-
-
-def parse_latex(content: bytes):
-    """ParsedDoc facade for the format dispatcher."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="tex")
-    spans, err = extract_latex_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

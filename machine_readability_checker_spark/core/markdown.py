@@ -309,14 +309,3 @@ def extract_md_tables(content: bytes) -> List[List[List[str]]]:
             grid.append(cells)
         grids.append(grid)
     return grids
-
-
-def parse_markdown(content: bytes):
-    """ParsedDoc facade for the format dispatcher."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="md")
-    spans, err = extract_md_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

@@ -326,7 +326,7 @@ def parse_odt(content: bytes):
                     )
                 spans.append(("line", "\t".join(cells), ""))
             emit_media(el)
-    doc.layout_spans = spans  # type: ignore[attr-defined]
+    doc.layout_spans = spans
     return doc
 
 

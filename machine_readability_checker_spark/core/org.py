@@ -305,14 +305,3 @@ def extract_org_tables(content: bytes) -> List[List[List[str]]]:
         return grids
     except Exception:
         return []
-
-
-def parse_org(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="org")
-    spans, err = extract_org_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

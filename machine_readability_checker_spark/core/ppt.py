@@ -166,14 +166,3 @@ def write_ppt(slides: List[List[Tuple[str, str]]]) -> bytes:
         _container(RT_SLIDE_LIST_WITH_TEXT, b"".join(slwt)),
     )
     return write_streams({"PowerPoint Document": document})
-
-
-def parse_ppt(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="ppt")
-    spans, err = extract_ppt_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

@@ -181,18 +181,6 @@ def extract_pptx_spans(
     return spans, None
 
 
-def parse_pptx(content: bytes):
-    """ParsedDoc facade for the format dispatcher (grid lane stays None,
-    like html/pdf/docx)."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="pptx")
-    spans, err = extract_pptx_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc
-
-
 # ------------------------------------------------------- fixture writer
 
 

@@ -420,14 +420,3 @@ def extract_rst_tables(content: bytes) -> List[List[List[str]]]:
         return grids
     except Exception:
         return []
-
-
-def parse_rst(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="rst")
-    spans, err = extract_rst_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

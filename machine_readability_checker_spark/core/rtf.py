@@ -187,17 +187,6 @@ def extract_rtf_spans(
     return spans, None
 
 
-def parse_rtf(content: bytes):
-    """ParsedDoc facade for the format dispatcher."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="rtf")
-    spans, err = extract_rtf_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc
-
-
 def write_rtf(
     paragraphs: List[str], with_picts: int = 0, unicode_demo: bool = False
 ) -> bytes:

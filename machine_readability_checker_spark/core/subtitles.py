@@ -151,14 +151,3 @@ def extract_subtitle_spans(
         ], None
     except Exception as e:
         return [], f"{fmt} parse failed: {e}"
-
-
-def parse_subtitles(content: bytes, fmt: str):
-    """ParsedDoc facade for the format dispatcher."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt=fmt)
-    spans, err = extract_subtitle_spans(content, fmt)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

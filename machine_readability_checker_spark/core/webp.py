@@ -58,6 +58,7 @@ _CODE_LENGTH_ORDER = [
 ]
 _NUM_LITERAL = 256
 _NUM_LENGTH_CODES = 24
+_MAX_COPY_LEN = 4096  # longest backward-reference length 24 codes reach
 _NUM_DISTANCE_CODES = 40
 _ARGB_BLACK = 0xFF000000
 
@@ -833,7 +834,10 @@ def _encode_image_stream(
         px = pixels[pos]
         if use_rle and pos > 0 and pixels[pos - 1] == px:
             run = 1
-            while pos + run < n and pixels[pos + run] == px:
+            while (
+                pos + run < n and run < _MAX_COPY_LEN
+                and pixels[pos + run] == px
+            ):
                 run += 1
             if run >= 3:
                 tokens.append(("copy", pos, run, 1))
@@ -844,7 +848,7 @@ def _encode_image_stream(
         if use_rle and pos >= xsize and pixels[pos - xsize] == px:
             run = 0
             while (
-                pos + run < n
+                pos + run < n and run < _MAX_COPY_LEN
                 and pixels[pos + run] == pixels[pos + run - xsize]
             ):
                 run += 1

@@ -587,15 +587,3 @@ def extract_wiki_links(content: bytes) -> List[Tuple[str, str]]:
         target = target[:1].upper() + target[1:]
         out.append((target, _clean_inline(label)))
     return out
-
-
-def parse_wikitext(content: bytes):
-    """grid.parse_document adapter — layout-span ParsedDoc like the
-    md/tex lanes."""
-    from .grid import ParsedDoc
-
-    doc = ParsedDoc(fmt="wiki")
-    spans, err = extract_wiki_spans(content)
-    doc.parse_error = err
-    doc.layout_spans = spans  # type: ignore[attr-defined]
-    return doc

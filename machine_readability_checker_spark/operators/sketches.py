@@ -468,12 +468,14 @@ def quantile_sketch_merge(
     """Union → bottom-k: EXACTLY the sketch of the concatenated
     corpora (the bottom-k of a union is the bottom-k of the union of
     bottom-ks — closure is exact, not approximate; duplicate ids
-    across shards keep one row via the distinct on h).  Associative
-    and commutative, so shard sketches roll up in any tree order."""
+    across shards keep one row via the group on h).  Each id is
+    assumed to map to one value; where two shards disagree, the
+    smaller value wins, so the merge is associative and commutative
+    and shard sketches roll up in any tree order."""
     return (
         a.unionByName(b)
         .groupBy("h")
-        .agg(F.first("v").alias("v"))
+        .agg(F.min("v").alias("v"))
         .orderBy("h")
         .limit(k)
     )

@@ -103,7 +103,6 @@ def run_resumable(
     splits, and the final output directory is identical."""
     import time as _time
 
-    verbose = bool(int(os.environ.get("MRC_TIMING", "0")))
     if split_expr_col is not None:
         # partition-spec override (sources/iceberg_table.split_expr):
         # the caller supplies both the bucket expression and the split-id
@@ -181,7 +180,6 @@ def run_resumable(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(store.data_dir)
         )
-        _twrite = _time.time()
         # derive per-split commit stats from the *written* data (read-back
         # counts are the exactly-once source of truth).  Only the `split`
         # partition column is touched — column pruning keeps this a
@@ -204,12 +202,6 @@ def run_resumable(
             this_wave_docs += docs
         wave_secs.append(round(_time.time() - _tw, 3))
         wave_docs.append(this_wave_docs)
-        if verbose:
-            print(
-                f"[wave {wave}] transform+write={_twrite - _tw:.1f}s "
-                f"readback+commit={_time.time() - _twrite:.1f}s",
-                flush=True,
-            )
         if on_wave_done is not None:
             on_wave_done(wave)
 

@@ -12,7 +12,11 @@ import pytest
 from machine_readability_checker_spark.core import cells as C
 from machine_readability_checker_spark.core import checks as K
 from machine_readability_checker_spark.core.extract import extract_document
-from machine_readability_checker_spark.core.grid import parse_document
+from machine_readability_checker_spark.core.grid import (
+    FORMATS,
+    GRID,
+    parse_document,
+)
 from machine_readability_checker_spark.core.html import extract_html_spans
 from machine_readability_checker_spark.core.xlsx import read_xlsx, write_xlsx
 from machine_readability_checker_spark.core.zones import (
@@ -306,6 +310,53 @@ def test_unsupported_and_broken_formats_quarantine():
     assert r3["metrics"]["parse_errors"] == 1  # xlrd not installed: stub lane
     r4 = extract_document("d4", "csv", b"\xff\xfe\x00bad\x81")
     assert r4["metrics"]["parse_errors"] in (0, 1)  # decode fallback path
+
+
+def _one_doc_per_format():
+    """First generated document of each format, plus a hand-built srt
+    (the generator's subtitle family only ever emits vtt)."""
+    from machine_readability_checker_spark.sources.fixtures import gen_corpus
+
+    docs = {}
+    for r in gen_corpus(46, seed=1, whale_every=None).itertuples():
+        docs.setdefault(r.fmt, bytes(r.content))
+    docs["srt"] = (
+        b"1\n00:00:01,000 --> 00:00:02,500\nHello there\n\n"
+        b"2\n00:00:03,000 --> 00:00:04,000\n<i>Second cue</i>\n"
+    )
+    return docs
+
+
+def _assert_lane(fmt, doc):
+    assert doc.parse_error is None, (fmt, doc.parse_error)
+    if FORMATS[fmt].lane == GRID:
+        assert doc.sheets and doc.layout_spans is None, fmt
+    else:
+        assert isinstance(doc.layout_spans, list), fmt
+
+
+def test_every_table_format_routes_to_its_lane():
+    """Table-driven routing: every format in the table parses a
+    well-formed document into its own lane, and extraction emits
+    spans for it (a format the gate admits but no lane handles would
+    extract zero spans with no parse error)."""
+    import gzip
+
+    docs = _one_doc_per_format()
+    assert set(docs) == set(FORMATS)
+    for fmt, content in docs.items():
+        doc = parse_document(fmt, content)
+        _assert_lane(fmt, doc)
+        r = extract_document("d", fmt, content)
+        assert r["parse_error"] is None and r["spans"], fmt
+        gz = parse_document(fmt, gzip.compress(content, mtime=0))
+        _assert_lane(fmt, gz)
+        assert gz.layout_spans == doc.layout_spans, fmt
+    for fmt, alias in (("csv", ".CSV"), ("html", "Html")):
+        doc = parse_document(alias, docs[fmt])
+        _assert_lane(fmt, doc)
+        assert doc.fmt == fmt
+        assert doc == parse_document(fmt, docs[fmt])
 
 
 def test_question_master_and_metadata_checks():

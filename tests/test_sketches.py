@@ -369,3 +369,23 @@ def test_quantile_sketch_bottom_k_semantics(spark):
     # scale shape: one TakeOrderedAndProject, no full sort
     plan = sk._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+def test_quantile_sketch_merge_commutes_on_conflicting_values(spark):
+    """Two shards that disagree on one id's value merge to the same
+    sketch in either order (the smaller value is kept)."""
+    schema = "doc_id long, v double"
+    a = SK.quantile_sketch(
+        spark.createDataFrame([(1, 5.0), (2, 7.0)], schema), "v", k=8
+    )
+    b = SK.quantile_sketch(
+        spark.createDataFrame([(2, 3.0), (3, 9.0)], schema), "v", k=8
+    )
+
+    def rows(df):
+        return sorted((r["h"], r["v"]) for r in df.collect())
+
+    ab = rows(SK.quantile_sketch_merge(a, b, 8))
+    assert ab == rows(SK.quantile_sketch_merge(b, a, 8))
+    h2 = hashlib.md5(b"2").hexdigest()
+    assert (h2, 3.0) in ab and len(ab) == 3

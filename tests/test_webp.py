@@ -107,6 +107,19 @@ def test_roundtrip_color_cache():
         assert got == px
 
 
+def test_roundtrip_rle_runs_over_max_copy_length():
+    """Uniform regions longer than VP8L's 4096-pixel maximum copy
+    length split into several copies: a left run (one flat 70x70
+    image) and an above run (identical two-color rows, so no left run
+    starts), each with and without the color cache."""
+    flat = bytes([10, 20, 30]) * (70 * 70)
+    striped = bytes([10, 20, 30, 200, 100, 50]) * 32 * 80
+    for w, h, px in ((70, 70, flat), (64, 80, striped)):
+        for bits in (0, 4):
+            ch, got = _roundtrip(w, h, 3, px, use_rle=True, cache_bits=bits)
+            assert got == px
+
+
 def test_roundtrip_subtract_green():
     w, h = 11, 7
     px = _pix(w, h, 3, 5)
