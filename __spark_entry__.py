@@ -2095,7 +2095,7 @@ def q_md_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.md_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "md")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -2136,7 +2136,7 @@ def q_wiki_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.wiki_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "wiki")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -2177,7 +2177,7 @@ def q_tex_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.tex_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "tex")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -2236,7 +2236,7 @@ def q_pdf_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the full 22-rule battery via the shared CSV ingest path — the
     PDF twin of ``html_table_rules``.  Two narrow ``mapInPandas``
     kernels + one hash aggregate."""
-    res = WT.pdf_table_rule_results(_variant_pdf_docs(spark, sf_dir))
+    res = WT.table_rule_results(_variant_pdf_docs(spark, sf_dir), "pdf")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -2250,7 +2250,7 @@ def q_pdf_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid dimensions — pins the column-union densification math (the 4×3
     variant-2 grid with a blank middle cell only exists if the dropped
     run densifies to "")."""
-    stats = WT.pdf_table_stats(_variant_pdf_docs(spark, sf_dir))
+    stats = WT.table_stats(_variant_pdf_docs(spark, sf_dir), "pdf")
     return (
         stats.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "table_idx", "n_rows", "n_cols", "kept")
@@ -5593,7 +5593,7 @@ def q_rst_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _fan(spark, docs).mapInPandas(
         kernel, schema="doc_id string, content binary"
     )
-    res = WT.rst_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "rst")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -5764,7 +5764,7 @@ def q_adoc_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _fan(spark, docs).mapInPandas(
         kernel, schema="doc_id string, content binary"
     )
-    res = WT.adoc_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "adoc")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -5940,7 +5940,7 @@ def q_org_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _fan(spark, docs).mapInPandas(
         kernel, schema="doc_id string, content binary"
     )
-    res = WT.org_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "org")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -6144,7 +6144,7 @@ def q_fw_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _fan(spark, docs).mapInPandas(
         kernel, schema="doc_id string, content binary"
     )
-    res = WT.fwtext_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "txt")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -6235,7 +6235,7 @@ def q_doc_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _fan(spark, docs).mapInPandas(
         kernel, schema="doc_id string, content binary"
     )
-    res = WT.doc_table_rule_results(pages)
+    res = WT.table_rule_results(pages, "doc")
     return (
         res.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "rule_id", "passed")
@@ -7983,7 +7983,7 @@ ORDER BY iv.iv_id
 
 
 def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Writing-script profile + homoglyph detection
+    r"""Writing-script profile + homoglyph detection
     (`textstats.script_profile` / `mixed_script_word_count`): each doc
     gets a JVM-synthesized mix of Latin words, a doc_id-scaled run of
     Cyrillic words, Han characters, and (every 3rd doc) the classic
@@ -8015,7 +8015,7 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_SCRIPT_MIX_SQL = """
+_SCRIPT_MIX_SQL = r"""
 WITH d AS (
   SELECT doc_id,
          'alpha beta ' || repeat('слово ', CAST(doc_id % 4 AS INT)) ||
@@ -11052,7 +11052,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM r GROUP BY 1 ORDER BY 1
         """,
         "lang_pred": _LANG_PRED_SQL,
-        "fingerprints": """
+        "fingerprints": r"""
             SELECT source, COUNT(*) AS n_docs,
                    COUNT(DISTINCT md5(lower(
                      regexp_replace(text, '[^\p{L}\p{N}]', '', 'g')
@@ -11489,7 +11489,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                   / (sa.set_size + sb.set_size - n_common) >= 0.8
             ORDER BY id_a, id_b
         """,
-        "cleaning_funnel": f"""
+        "cleaning_funnel": rf"""
             WITH s1 AS (
               SELECT doc_id, text FROM (
                 SELECT doc_id, text, row_number() OVER (

@@ -67,7 +67,11 @@ def main() -> None:
     ap.add_argument("--version", type=int, default=None)
     ap.add_argument("--gen", type=int, default=0)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
+    )
     ap.add_argument("--jaccard", type=float, default=0.8)
     ap.add_argument(
         "--require-known-lang", action="store_true",
@@ -248,9 +252,10 @@ def main() -> None:
 
     spark = get_spark(
         "mrc-clean-job",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     t0 = time.time()
 

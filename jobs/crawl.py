@@ -96,17 +96,19 @@ def main() -> None:
     ap.add_argument("--splits", type=int, default=16)
     ap.add_argument("--wave", type=int, default=0)
     ap.add_argument(
-        "--cores", type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
     )
     args = ap.parse_args()
 
     t0 = time.time()
     spark = get_spark(
         "mrc-crawl",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     expected = None

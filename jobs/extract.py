@@ -107,7 +107,11 @@ def main() -> None:
         "core counts prefer --wave 0 (measured: 4-6 s waves at "
         "local[32] cost ~40%% of wall in fixed overhead)",
     )
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
+    )
     ap.add_argument("--partitions", type=int, default=0)
     ap.add_argument(
         "--max-waves", type=int, default=0,
@@ -157,9 +161,10 @@ def main() -> None:
 
     spark = get_spark(
         "mrc-extract-job",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     n_parts = args.partitions or max(8, args.cores)
 

@@ -77,16 +77,19 @@ def main() -> None:
     ap.add_argument("--gen", type=int, default=0, help="self-generate N docs")
     ap.add_argument("--threshold", type=float, default=0.5)
     ap.add_argument(
-        "--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
     )
     ap.add_argument("--n-buckets", type=int, default=64)
     args = ap.parse_args()
 
     spark = get_spark(
         "mrc-ingest-job",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     stats = run(spark, args)
     print(json.dumps(stats))

@@ -259,16 +259,18 @@ def main() -> None:
         "PII report (GPS-bearing blobs) under --out/exif_report",
     )
     ap.add_argument(
-        "--cores", type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
     )
     args = ap.parse_args()
 
     spark = get_spark(
         "mrc-media",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     inc_gen = None  # set by --since-version (generation-named exports)

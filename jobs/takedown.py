@@ -112,15 +112,20 @@ def main() -> None:
         help="build a deterministic demo table (+indexes at the given "
         "paths) first — the self-contained verify surface",
     )
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
+    )
     args = ap.parse_args()
 
     t0 = time.time()
     spark = get_spark(
-        "mrc-takedown", master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        "mrc-takedown",
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     table = IcebergLayoutTable(args.table)
     if args.gen:

@@ -66,16 +66,18 @@ def main() -> None:
         "the FFD residual; overflow docs sit alone, flagged)",
     )
     ap.add_argument(
-        "--cores", type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "--cores", type=int, default=None,
+        help="run on local[N] (default: spark-submit's --master, else "
+        "local[SPARK_GRAFT_CPUS or this host's CPUs])",
     )
     args = ap.parse_args()
 
     spark = get_spark(
         "mrc-tokenize",
-        master=f"local[{args.cores}]",
-        shuffle_partitions=max(8, args.cores),
+        master=f"local[{args.cores}]" if args.cores else None,
     )
+    # size everything from the session the job really got
+    args.cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
 

@@ -21,7 +21,7 @@ that printed-table audit:
   ``boilerplate`` by the shared length threshold;
 - table rows emit as ``line`` spans (tab-joined) like every other
   table-bearing lane; grids flow into the shared 22-rule battery via
-  ``operators.webtables.fwtext_table_rule_results``.
+  ``operators.webtables.table_rule_results(df, "txt")``.
 
 Fixed-width layout cannot express col/row spans or in-cell breaks, so
 — like the GFM pipe-table lane — merged regions are authored as empty

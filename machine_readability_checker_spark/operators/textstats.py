@@ -139,7 +139,7 @@ def lang_id(col: Column) -> Column:
 
 
 def doc_fingerprint(col: Column) -> Column:
-    """Deterministic document fingerprint: md5 of the lowercased text
+    r"""Deterministic document fingerprint: md5 of the lowercased text
     with everything outside Unicode letters/digits removed (portable
     across engines — Spark's Java regex and DuckDB's RE2 agree on
     \p{L}\p{N}).  MUST be Unicode classes, not [A-Za-z0-9]: an ASCII

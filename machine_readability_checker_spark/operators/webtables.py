@@ -1,38 +1,45 @@
-"""Web-table extraction: the reference's rule battery over ``<table>``
-elements inside crawled HTML pages.
+"""Table extraction: the reference's rule battery over the tables
+embedded in documents (HTML ``<table>``, GFM pipe tables, LaTeX
+``tabular``, printed PDF pages, wikitables, RST grid tables, AsciiDoc
+psv tables, Org tables, fixed-width text dumps, Word 97 tables).
 
 The reference audits machine readability of *uploaded tabular files*
 (csv/xlsx/xls — ``loader.py:15``, ``app.py:156-167``).  A web-scale
-corpus meets the same tables embedded in HTML: this operator lifts each
-outermost ``<table>`` subtree out of a page into a dense grid
-(``core/html.py::extract_html_tables`` — colspan/rowspan expand to empty
-filler exactly like unmerged spreadsheet ranges), serializes the grid
-through the CSV ingest path (same pandas type inference as a ``.csv``
-upload), and runs the full 22-rule battery on it.  A grid therefore
-produces *identical* rule results whether it arrived as a CSV file or a
-``<table>`` in a WARC capture — one battery, two ingest surfaces.
+corpus meets the same tables inside other documents: each format's
+``core.<module>.extract_*_tables`` lifts them into dense grids
+(colspan/rowspan and their analogs expand to empty filler exactly like
+unmerged spreadsheet ranges), each grid is serialized through the CSV
+ingest path (same pandas type inference as a ``.csv`` upload), and the
+full 22-rule battery runs on it.  A grid therefore produces *identical*
+rule results whether it arrived as a CSV file or as a table in any of
+these formats — one battery, many ingest surfaces.
+
+``TABLE_GRIDS`` below is the one place a table format is added: one row
+names the format's ``extract_*_tables`` function, and its core module
+comes from ``core.grid.FORMATS``.
 
 Scale shape (100 TB):
 - ``table_rule_results`` / ``table_stats`` are single ``mapInPandas``
   kernels — narrow, Arrow-batched, zero shuffle; parallelism is the
-  input partitioning of the page corpus (same contract as
+  input partitioning of the document corpus (same contract as
   ``operators/extract.py``).
 - tiny layout/navigation tables (the web is full of them) are dropped
-  executor-side by ``min_rows``/``min_cols`` *before* any rule work, so
-  the battery only runs on data-shaped grids.
-- hostile span attributes are clamped in the parser (``colspan=1e9``
+  executor-side (``DEFAULT_MIN_ROWS``/``DEFAULT_MIN_COLS``) *before*
+  any rule work, so the battery only runs on data-shaped grids.
+- hostile span attributes are clamped in the parsers (``colspan=1e9``
   cannot allocate a giant row).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from importlib import import_module
+from typing import Dict, Iterator, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..core.grid import parse_csv
-from ..core.html import extract_html_tables, table_grid_to_csv
+from ..core.grid import FORMATS, parse_csv
+from ..core.html import table_grid_to_csv
 from ..core.checks import run_checks
 from ..core.zones import extract_zones
 
@@ -49,14 +56,45 @@ TABLE_STATS_SCHEMA = (
 DEFAULT_MIN_ROWS = 2
 DEFAULT_MIN_COLS = 2
 
+# The table-format table: format (a ``core.grid.FORMATS`` key) → the
+# ``extract_*_tables`` function of that format's core module, which
+# takes the document bytes and returns its grids in document order.
+# Two rows differ: html also takes the page charset and returns
+# ``(grids, encoding)``; pdf returns ``(grids, parse_error)``.
+TABLE_GRIDS: Dict[str, str] = {
+    "html": "extract_html_tables",
+    "md": "extract_md_tables",
+    "tex": "extract_latex_tables",
+    "pdf": "extract_pdf_tables",
+    "wiki": "extract_wiki_tables",
+    "rst": "extract_rst_tables",
+    "adoc": "extract_adoc_tables",
+    "org": "extract_org_tables",
+    "txt": "extract_fw_tables",
+    "doc": "extract_doc_tables",
+}
 
-def _page_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    charset = str(getattr(row, "charset", "") or "")
+
+def _grids(fmt: str, row) -> Tuple[List[List[List[str]]], Optional[str]]:
+    """One document row → (grids, quarantine message or None)."""
+    module = import_module(f"..core.{FORMATS[fmt].module}", __package__)
+    extract = getattr(module, TABLE_GRIDS[fmt])
     try:
-        grids, _enc = extract_html_tables(bytes(row.content), charset)
-        return grids, None
-    except Exception as e:  # malformed page must not kill the batch
-        return [], f"html table extract failed: {e}"
+        content = bytes(row.content)
+        if fmt == "html":
+            charset = str(getattr(row, "charset", "") or "")
+            return extract(content, charset)[0], None
+        if fmt == "pdf":
+            return extract(content)
+        return extract(content), None
+    except Exception as e:  # a malformed document must not kill the batch
+        return [], f"{fmt} table extract failed: {e}"
+
+
+def _data_shaped(grid: List[List[str]]) -> bool:
+    return (
+        len(grid) >= DEFAULT_MIN_ROWS and len(grid[0]) >= DEFAULT_MIN_COLS
+    )
 
 
 def _grid_rules(grid: List[List[str]]):
@@ -69,68 +107,19 @@ def _grid_rules(grid: List[List[str]]):
     return run_checks(doc, ctx)
 
 
-def table_rule_results(
-    df_pages: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """pages(doc_id, content[, charset]) → one row per (data table, rule).
-
-    ``table_idx`` indexes *kept* (data-shaped) tables in document order.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _page_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_pages.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
+def _check_fmt(fmt: str) -> None:
+    if fmt not in TABLE_GRIDS:
+        raise ValueError(f"no table extractor for format: {fmt!r}")
 
 
-def _md_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.markdown import extract_md_tables
+def table_rule_results(df_docs: DataFrame, fmt: str = "html") -> DataFrame:
+    """docs(doc_id, content[, charset]) of format ``fmt`` → one row per
+    (data-shaped table, rule).
 
-    try:
-        return extract_md_tables(bytes(row.content)), None
-    except Exception as e:  # malformed markdown must not kill the batch
-        return [], f"md table extract failed: {e}"
-
-
-def md_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=markdown bytes) → one row per (table, rule).
-
-    The GFM-pipe-table twin of ``table_rule_results``: markdown grids
-    are rectangular by spec (body rows pad/truncate to header width,
-    ``core/markdown.py``), and each data-shaped grid runs the full
-    rule battery through the same CSV ingest path — a table audits
-    identically whether it arrived as a CSV upload, an HTML
-    ``<table>``, a printed PDF page, or a README pipe table.  Same
-    100 TB shape: one narrow Arrow-batched ``mapInPandas``, zero
-    shuffle."""
+    ``table_idx`` indexes *kept* tables in document order.  A document
+    whose extractor fails yields one ``PARSE`` row with ``table_idx``
+    -1 instead of failing the task."""
+    _check_fmt(fmt)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [
@@ -140,15 +129,12 @@ def md_table_rule_results(
         for batch in batches:
             out = []
             for row in batch.itertuples(index=False):
-                grids, err = _md_grids(row)
+                grids, err = _grids(fmt, row)
                 did = str(row.doc_id)
                 if err is not None:
                     out.append((did, -1, 0, 0, "PARSE", False, err))
                     continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
+                kept = [g for g in grids if _data_shaped(g)]
                 for ti, g in enumerate(kept):
                     for rule_id, passed, msg in _grid_rules(g):
                         out.append(
@@ -160,166 +146,29 @@ def md_table_rule_results(
     return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
 
 
-def _tex_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.latex import extract_latex_tables
-
-    try:
-        return extract_latex_tables(bytes(row.content)), None
-    except Exception as e:  # malformed latex must not kill the batch
-        return [], f"tex table extract failed: {e}"
-
-
-def tex_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=latex bytes) → one row per (table, rule).
-
-    The ``tabular`` twin of ``table_rule_results``: LaTeX grids are
-    rectangular by construction (rows padded to the widest row,
-    ``\\multicolumn`` span-expanded with empty fillers,
-    ``core/latex.py``), and each data-shaped grid runs the full rule
-    battery through the same CSV ingest path — a table audits
-    identically whether it arrived as a CSV upload, an HTML
-    ``<table>``, a printed PDF page, a README pipe table, or a paper's
-    ``tabular``.  Same 100 TB shape: one narrow Arrow-batched
-    ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _tex_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
-
-
-def _pdf_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.pdf import extract_pdf_tables
-
-    try:
-        return extract_pdf_tables(bytes(row.content))
-    except Exception as e:  # malformed pdf must not kill the batch
-        return [], f"pdf table extract failed: {e}"
-
-
-def pdf_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=pdf bytes) → one row per (table, rule).
-
-    The printed-page twin of ``table_rule_results``: x-alignment blocks
-    from the layout lane densify into grids (``core/pdf.py::
-    extract_pdf_tables`` — a line missing a run at a column yields
-    ``""``, the blank/merged-cell analog) and each data-shaped grid runs
-    the full rule battery through the same CSV ingest path.  A table
-    therefore audits identically whether it arrived as a CSV upload, an
-    HTML ``<table>``, or a printed PDF page.  Same 100 TB shape: one
-    narrow Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _pdf_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
-
-
-def pdf_table_stats(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs → one row per detected PDF table with its grid dimensions
-    (corpus-survey twin of ``table_stats``)."""
+def table_stats(df_docs: DataFrame, fmt: str = "html") -> DataFrame:
+    """docs of format ``fmt`` → one row per captured table (kept or
+    filtered) with its grid dimensions — the corpus-survey side of the
+    lane (what share of tables are data-shaped at all).  Documents whose
+    extractor fails yield no rows."""
+    _check_fmt(fmt)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "table_idx", "n_rows", "n_cols", "kept"]
         for batch in batches:
             out = []
             for row in batch.itertuples(index=False):
-                grids, err = _pdf_grids(row)
+                grids, err = _grids(fmt, row)
                 if err is not None:
                     continue
                 for ti, g in enumerate(grids):
-                    nr, nc = len(g), (len(g[0]) if g else 0)
                     out.append(
-                        (str(row.doc_id), ti, nr, nc,
-                         nr >= min_rows and nc >= min_cols)
+                        (str(row.doc_id), ti, len(g),
+                         len(g[0]) if g else 0, _data_shaped(g))
                     )
             yield pd.DataFrame(out, columns=cols)
 
     return df_docs.mapInPandas(kernel, schema=TABLE_STATS_SCHEMA)
-
-
-def table_stats(
-    df_pages: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """pages → one row per captured table (kept or filtered) with its
-    grid dimensions — the corpus-survey side of the lane (what share of
-    crawled tables are data-shaped at all)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "table_idx", "n_rows", "n_cols", "kept"]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _page_grids(row)
-                if err is not None:
-                    continue
-                for ti, g in enumerate(grids):
-                    nr, nc = len(g), (len(g[0]) if g else 0)
-                    out.append(
-                        (str(row.doc_id), ti, nr, nc,
-                         nr >= min_rows and nc >= min_cols)
-                    )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_pages.mapInPandas(kernel, schema=TABLE_STATS_SCHEMA)
 
 
 # ------------------------------------------------------------------
@@ -614,60 +463,6 @@ def wiki_variant_doc(doc_id: int, text: str) -> bytes:
     ).encode("utf-8")
 
 
-def _wiki_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.wikitext import extract_wiki_tables
-
-    try:
-        return extract_wiki_tables(bytes(row.content)), None
-    except Exception as e:  # malformed wikitext must not kill the batch
-        return [], f"wiki table extract failed: {e}"
-
-
-def wiki_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=wikitext bytes) → one row per (table, rule).
-
-    The ``{| … |}`` twin of ``table_rule_results``: wiki grids are
-    rectangular by construction (colspan/rowspan span-expanded with
-    empty fillers, rows padded to the widest row,
-    ``core/wikitext.py``), and each data-shaped grid runs the full
-    rule battery through the same CSV ingest path — a table audits
-    identically whether it arrived as a CSV upload, an HTML
-    ``<table>``, a printed PDF page, a README pipe table, a paper's
-    ``tabular``, or an encyclopedia article's wikitable.  Same 100 TB
-    shape: one narrow Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _wiki_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
-
-
 # reStructuredText twins of VARIANT_TABLES: grid tables whose corner
 # geometry expresses the SAME col/row spans, multi-line cells and
 # full-width indents as the HTML variants, so the corner-walk parser
@@ -745,9 +540,6 @@ def _rst_grid_table(rows) -> str:
                 parts.append(" " + body.ljust(width - 1))
                 parts.append("|")
             lines.append("".join(parts))
-        if rowspan_cont:
-            # blank the edge between the continuing cell's bands
-            pass
     lines.append(border(len(rows)))
     return "\n".join(lines) + "\n"
 
@@ -798,56 +590,6 @@ def rst_variant_doc(doc_id: int, text: str) -> bytes:
     ).encode("utf-8")
 
 
-def _rst_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.rst import extract_rst_tables
-
-    try:
-        return extract_rst_tables(bytes(row.content)), None
-    except Exception as e:  # malformed rst must not kill the batch
-        return [], f"rst table extract failed: {e}"
-
-
-def rst_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=rst bytes) → one row per (table, rule).
-
-    The grid-table twin of ``table_rule_results``: RST grids are
-    rectangular by the corner-walk construction (spans expand to empty
-    filler), and each data-shaped grid runs the full rule battery
-    through the same CSV ingest path.  Same 100 TB shape: one narrow
-    Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _rst_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
-
-
 # AsciiDoc twins of VARIANT_TABLES: psv tables whose cell specs
 # (``3+|`` colspan, ``.2+|`` rowspan) and continuation lines express
 # the same spans and in-cell line breaks as the HTML variants, so the
@@ -892,51 +634,6 @@ def adoc_variant_doc(doc_id: int, text: str) -> bytes:
         f"{ADOC_VARIANT_TABLES[v]}\n"
         "generated fixture page\n"
     ).encode("utf-8")
-
-
-def _adoc_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.adoc import extract_adoc_tables
-
-    try:
-        return extract_adoc_tables(bytes(row.content)), None
-    except Exception as e:  # malformed adoc must not kill the batch
-        return [], f"adoc table extract failed: {e}"
-
-
-def adoc_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=adoc bytes) → one row per (table, rule) —
-    the psv twin of ``table_rule_results``, same 100 TB shape."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _adoc_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
 
 
 # Fixed-width plain-text twins of VARIANT_TABLES, authored as grids
@@ -985,52 +682,6 @@ def fw_variant_doc(doc_id: int, text: str) -> bytes:
         f"{render_fw_table(FW_VARIANT_GRIDS[v])}\n"
         "generated fixture page\n"
     ).encode("utf-8")
-
-
-def _fw_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.fwtext import extract_fw_tables
-
-    try:
-        return extract_fw_tables(bytes(row.content)), None
-    except Exception as e:  # malformed text must not kill the batch
-        return [], f"fw table extract failed: {e}"
-
-
-def fwtext_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=plain-text bytes) → one row per (table,
-    rule) — the fixed-width twin of ``table_rule_results``, same 100 TB
-    shape: one narrow Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _fw_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
 
 
 # Org-mode twins of VARIANT_TABLES.  Org tables cannot express
@@ -1085,52 +736,6 @@ def org_variant_doc(doc_id: int, text: str) -> bytes:
         f"{ORG_VARIANT_TABLES[v]}\n"
         "generated fixture page\n"
     ).encode("utf-8")
-
-
-def _org_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.org import extract_org_tables
-
-    try:
-        return extract_org_tables(bytes(row.content)), None
-    except Exception as e:  # malformed org must not kill the batch
-        return [], f"org table extract failed: {e}"
-
-
-def org_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=org bytes) → one row per (table, rule) —
-    the Org-mode twin of ``table_rule_results``, same 100 TB shape:
-    one narrow Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _org_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
 
 
 # Word-97 twins of VARIANT_TABLES: authored with the .doc fixture
@@ -1189,55 +794,6 @@ def doc_variant_doc(doc_id: int, text: str) -> bytes:
         ("para", "generated fixture page"),
     ]
     return write_doc(blocks)
-
-
-def _doc_grids(row) -> Tuple[List[List[List[str]]], Optional[str]]:
-    from ..core.doc import extract_doc_tables
-
-    try:
-        return extract_doc_tables(bytes(row.content)), None
-    except Exception as e:  # malformed doc must not kill the batch
-        return [], f"doc table extract failed: {e}"
-
-
-def doc_table_rule_results(
-    df_docs: DataFrame,
-    min_rows: int = DEFAULT_MIN_ROWS,
-    min_cols: int = DEFAULT_MIN_COLS,
-) -> DataFrame:
-    """docs(doc_id, content=.doc bytes) → one row per (table, rule) —
-    the binary-Word twin of ``table_rule_results``: TAP merge flags
-    densify to the same empty-filler grids as HTML colspan/rowspan, so
-    a table audits identically whether it arrived as a CSV upload, a
-    crawled ``<table>``, or a Word 97 report.  Same 100 TB shape: one
-    narrow Arrow-batched ``mapInPandas``, zero shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "table_idx", "n_rows", "n_cols",
-            "rule_id", "passed", "message",
-        ]
-        for batch in batches:
-            out = []
-            for row in batch.itertuples(index=False):
-                grids, err = _doc_grids(row)
-                did = str(row.doc_id)
-                if err is not None:
-                    out.append((did, -1, 0, 0, "PARSE", False, err))
-                    continue
-                kept = [
-                    g for g in grids
-                    if len(g) >= min_rows and len(g[0]) >= min_cols
-                ]
-                for ti, g in enumerate(kept):
-                    for rule_id, passed, msg in _grid_rules(g):
-                        out.append(
-                            (did, ti, len(g), len(g[0]),
-                             rule_id, bool(passed), msg)
-                        )
-            yield pd.DataFrame(out, columns=cols)
-
-    return df_docs.mapInPandas(kernel, schema=TABLE_RULES_SCHEMA)
 
 
 def variant_page(doc_id: int, text: str) -> bytes:

@@ -27,18 +27,20 @@ def get_spark(
     shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[Dict[str, str]] = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(8, int(cpus))
-        except ValueError:
-            shuffle_partitions = 32
-
+    """The engine's session.  With no ``master``, a process started by
+    spark-submit (which sets ``PYSPARK_GATEWAY_PORT``) keeps the
+    submitted ``--master``; any other process runs
+    ``local[SPARK_GRAFT_CPUS or the CPUs this process may use]``.
+    ``shuffle_partitions`` defaults to max(8, the session's default
+    parallelism)."""
+    builder = SparkSession.builder.appName(app_name)
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        master = f"local[{cpus}]"
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -51,6 +53,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(max(8, spark.sparkContext.defaultParallelism)),
+        )
+    return spark

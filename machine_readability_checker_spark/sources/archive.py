@@ -36,7 +36,7 @@ import os
 import posixpath
 import tarfile
 import zipfile
-from typing import Iterator, List, Tuple
+from typing import Callable, Dict, Iterable, Iterator, List, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -102,25 +102,24 @@ def iter_archive_members(
     return list(walker)
 
 
-def read_archives(
-    spark: SparkSession,
-    path_glob: str,
-    max_member_bytes: int = MAX_MEMBER_BYTES,
+def read_bundles(
+    files: DataFrame,
+    walk: Callable[[str, bytes], Iterable[Tuple[str, str, bytes]]],
+    error_fmt: str,
 ) -> DataFrame:
-    """Archive files matching ``path_glob`` → RAW_SCHEMA rows, one per
-    member (plus quarantine rows for oversized members / corrupt
-    archives)."""
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
+    """The kernel shared by the bundle sources (archive, mbox, dump):
+    a ``binaryFile`` frame → RAW_SCHEMA rows, one per ``(suffix, fmt,
+    content)`` that ``walk(path, data)`` yields, with doc_id
+    ``<file>!<suffix>``.
+
+    The walk runs inside the ``try``: a file whose walk raises keeps
+    the rows it yielded before the error and adds ONE quarantine row
+    (doc_id ``<file>``, fmt ``error_fmt``, the error text as content),
+    never a task failure."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = {
-                "doc_id": [], "fmt": [], "content": [], "n_bytes": [],
-                "header_start_row": [], "header_end_row": [],
-                "data_start_row": [], "data_end_row": [], "sheet_idx": [],
-            }
+            rows: Dict[str, list] = {c: [] for c in RAW_SCHEMA.names}
 
             def emit(doc_id: str, fmt: str, content: bytes) -> None:
                 rows["doc_id"].append(doc_id)
@@ -134,15 +133,28 @@ def read_archives(
             for path, data in zip(batch["path"], batch["content"]):
                 base = os.path.basename(str(path))
                 try:
-                    members = iter_archive_members(
-                        str(path), bytes(data), max_member_bytes
-                    )
+                    for suffix, fmt, content in walk(str(path), bytes(data)):
+                        emit(f"{base}!{suffix}", fmt, content)
                 except Exception as e:
-                    emit(base, "__archive_error__",
-                         str(e).encode("utf-8", "replace"))
-                    continue
-                for name, fmt, content in members:
-                    emit(f"{base}!{name}", fmt, content)
+                    emit(base, error_fmt, str(e).encode("utf-8", "replace"))
             yield pd.DataFrame(rows)
 
-    return files.mapInPandas(kernel, schema=RAW_SCHEMA)
+    return files.select("path", "content").mapInPandas(
+        kernel, schema=RAW_SCHEMA
+    )
+
+
+def read_archives(
+    spark: SparkSession,
+    path_glob: str,
+    max_member_bytes: int = MAX_MEMBER_BYTES,
+) -> DataFrame:
+    """Archive files matching ``path_glob`` → RAW_SCHEMA rows, one per
+    member (plus quarantine rows for oversized members / corrupt
+    archives — a corrupt archive yields no member rows, because the
+    member list is read whole before any row is emitted)."""
+    return read_bundles(
+        spark.read.format("binaryFile").load(path_glob),
+        lambda path, data: iter_archive_members(path, data, max_member_bytes),
+        "__archive_error__",
+    )

@@ -26,15 +26,13 @@ Deterministic: messages emit in archive order.
 
 from __future__ import annotations
 
-import os
 import re
 import zlib
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..model import RAW_SCHEMA
+from .archive import read_bundles
 
 MAX_MBOX_BYTES = 2 << 30  # decompressed cap per archive (bomb guard)
 
@@ -69,38 +67,14 @@ def read_mbox(
 ) -> DataFrame:
     """mbox archives matching ``path_glob`` → RAW_SCHEMA rows, one per
     message (plus one quarantine row per corrupt archive)."""
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
+    return read_bundles(
+        spark.read.format("binaryFile").load(path_glob),
+        lambda _path, data: (
+            (seq, "eml", message)
+            for seq, message in enumerate(split_mbox(data))
+        ),
+        "__mbox_error__",
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {
-                "doc_id": [], "fmt": [], "content": [], "n_bytes": [],
-                "header_start_row": [], "header_end_row": [],
-                "data_start_row": [], "data_end_row": [], "sheet_idx": [],
-            }
-
-            def emit(doc_id: str, fmt: str, content: bytes) -> None:
-                rows["doc_id"].append(doc_id)
-                rows["fmt"].append(fmt)
-                rows["content"].append(content)
-                rows["n_bytes"].append(len(content))
-                for h in ("header_start_row", "header_end_row",
-                          "data_start_row", "data_end_row", "sheet_idx"):
-                    rows[h].append(0)
-
-            for path, data in zip(batch["path"], batch["content"]):
-                base = os.path.basename(str(path))
-                try:
-                    for seq, message in enumerate(split_mbox(bytes(data))):
-                        emit(f"{base}!{seq}", "eml", message)
-                except Exception as e:
-                    emit(base, "__mbox_error__",
-                         str(e).encode("utf-8", "replace"))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(kernel, schema=RAW_SCHEMA)
 
 
 def write_mbox(messages: List[bytes]) -> bytes:

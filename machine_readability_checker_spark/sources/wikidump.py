@@ -35,14 +35,12 @@ Deterministic: pages emit in dump order.
 from __future__ import annotations
 
 import bz2
-import os
 from typing import Iterator, List, Optional, Tuple
 from xml.etree import ElementTree
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..model import RAW_SCHEMA
+from .archive import read_bundles
 
 MAX_PART_BYTES = 2 << 30  # decompressed cap per dump part (bomb guard)
 
@@ -130,47 +128,22 @@ def read_wikidump(
     prepend_title: bool = True,
 ) -> DataFrame:
     """Dump parts matching ``path_glob`` → RAW_SCHEMA rows, one per
-    kept page (plus one quarantine row per corrupt part)."""
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
+    kept page (plus one quarantine row per corrupt part, after the
+    pages parsed before the error)."""
+
+    def walk(_path: str, data: bytes) -> Iterator[Tuple[str, str, bytes]]:
+        for pid, title, text, _red in iter_dump_pages(
+            data, namespaces, keep_redirects
+        ):
+            if prepend_title and title:
+                text = f"= {title} =\n\n{text}"
+            yield pid, "wiki", text.encode("utf-8")
+
+    return read_bundles(
+        spark.read.format("binaryFile").load(path_glob),
+        walk,
+        "__wikidump_error__",
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {
-                "doc_id": [], "fmt": [], "content": [], "n_bytes": [],
-                "header_start_row": [], "header_end_row": [],
-                "data_start_row": [], "data_end_row": [], "sheet_idx": [],
-            }
-
-            def emit(doc_id: str, fmt: str, content: bytes) -> None:
-                rows["doc_id"].append(doc_id)
-                rows["fmt"].append(fmt)
-                rows["content"].append(content)
-                rows["n_bytes"].append(len(content))
-                for h in ("header_start_row", "header_end_row",
-                          "data_start_row", "data_end_row", "sheet_idx"):
-                    rows[h].append(0)
-
-            for path, data in zip(batch["path"], batch["content"]):
-                base = os.path.basename(str(path))
-                try:
-                    for pid, title, text, _red in iter_dump_pages(
-                        bytes(data), namespaces, keep_redirects
-                    ):
-                        body = (
-                            f"= {title} =\n\n{text}"
-                            if prepend_title and title
-                            else text
-                        )
-                        emit(f"{base}!{pid}", "wiki",
-                             body.encode("utf-8"))
-                except Exception as e:
-                    emit(base, "__wikidump_error__",
-                         str(e).encode("utf-8", "replace"))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(kernel, schema=RAW_SCHEMA)
 
 
 # ------------------------------------------------------------- fixtures

@@ -15,6 +15,7 @@ import pytest
 from machine_readability_checker_spark.sources.archive import (
     iter_archive_members,
     read_archives,
+    read_bundles,
 )
 from machine_readability_checker_spark.sources.fixtures import (
     _csv_bytes,
@@ -106,6 +107,34 @@ def test_read_archives_end_to_end(spark, tmp_path):
     assert extracted["one.tar!t.csv"]["metrics"]["parse_errors"] == 0
     kinds = {s["kind"] for s in extracted["one.tar!t.csv"]["spans"]}
     assert "header" in kinds and "cell" in kinds
+
+
+def test_read_bundles_keeps_rows_before_a_mid_file_error(spark, tmp_path):
+    """The shared bundle-source kernel iterates the walker inside its
+    ``try``: rows yielded before a mid-file error survive, followed by
+    one quarantine row for the file; other files are untouched."""
+    (tmp_path / "a.bin").write_bytes(b"abc")
+    (tmp_path / "b.bin").write_bytes(b"abX")
+
+    def walk(_path, data):
+        for i, ch in enumerate(data):
+            if ch == ord("X"):
+                raise ValueError("bad byte")
+            yield i, "txt", bytes([ch])
+
+    files = spark.read.format("binaryFile").load(str(tmp_path / "*.bin"))
+    rows = sorted(
+        (r.doc_id, r.fmt, bytes(r.content), r.n_bytes, r.sheet_idx)
+        for r in read_bundles(files, walk, "__test_error__").collect()
+    )
+    assert rows == [
+        ("a.bin!0", "txt", b"a", 1, 0),
+        ("a.bin!1", "txt", b"b", 1, 0),
+        ("a.bin!2", "txt", b"c", 1, 0),
+        ("b.bin", "__test_error__", b"bad byte", 8, 0),
+        ("b.bin!0", "txt", b"a", 1, 0),
+        ("b.bin!1", "txt", b"b", 1, 0),
+    ]
 
 
 def test_archive_job_surface(tmp_path):

@@ -9,13 +9,26 @@ Covers:
 - the constructive variant pins backing the DuckDB oracle literals in
   ``__spark_entry__`` (drift in parser, zones, or checks breaks here
   first);
-- the Spark operators end-to-end (partition-count invariance).
+- the Spark operators end-to-end for every table format
+  (partition-count invariance, driver-side oracle, quarantine).
 """
 
 from __future__ import annotations
 
 import pytest
 
+from machine_readability_checker_spark.core import (
+    adoc,
+    doc,
+    fwtext,
+    html,
+    latex,
+    markdown,
+    org,
+    pdf,
+    rst,
+    wikitext,
+)
 from machine_readability_checker_spark.core.grid import parse_csv
 from machine_readability_checker_spark.core.checks import run_checks
 from machine_readability_checker_spark.core.html import (
@@ -201,6 +214,43 @@ def _pages_df(spark, n_docs: int, n_parts: int):
     ).repartition(n_parts)
 
 
+# per table format: the fixture builder, an oracle grid extractor
+# straight from the core module, and the kept (data-shaped) tables per
+# doc for variants 0/1/2 — variant 2's one-row nav strip is filtered in
+# every format, and the printed page carries a second 2×2 table
+_FORMAT_CASES = {
+    "html": (WT.variant_page, lambda b: html.extract_html_tables(b)[0],
+             (1, 1, 1)),
+    "md": (WT.md_variant_doc, markdown.extract_md_tables, (1, 1, 1)),
+    "tex": (WT.tex_variant_doc, latex.extract_latex_tables, (1, 1, 1)),
+    "pdf": (WT.variant_pdf, lambda b: pdf.extract_pdf_tables(b)[0],
+            (1, 1, 2)),
+    "wiki": (WT.wiki_variant_doc, wikitext.extract_wiki_tables, (1, 1, 1)),
+    "rst": (WT.rst_variant_doc, rst.extract_rst_tables, (1, 1, 1)),
+    "adoc": (WT.adoc_variant_doc, adoc.extract_adoc_tables, (1, 1, 1)),
+    "org": (WT.org_variant_doc, org.extract_org_tables, (1, 1, 1)),
+    "txt": (WT.fw_variant_doc, fwtext.extract_fw_tables, (1, 1, 1)),
+    "doc": (WT.doc_variant_doc, doc.extract_doc_tables, (1, 1, 1)),
+}
+_GARBAGE = b"\xff\xfe\x00garbage not a document at all"
+
+
+def test_format_cases_cover_every_table_format():
+    assert set(_FORMAT_CASES) == set(WT.TABLE_GRIDS)
+
+
+def _oracle_rows(extract, docs):
+    out = []
+    for did, content in docs:
+        kept = [g for g in extract(content) if len(g) >= 2 and len(g[0]) >= 2]
+        for ti, g in enumerate(kept):
+            for rule_id, passed, msg in WT._grid_rules(g):
+                out.append(
+                    (did, ti, len(g), len(g[0]), rule_id, bool(passed), msg)
+                )
+    return sorted(out)
+
+
 def test_spark_rule_results_partition_invariant(spark):
     a = WT.table_rule_results(_pages_df(spark, 9, 1))
     b = WT.table_rule_results(_pages_df(spark, 9, 7))
@@ -209,6 +259,36 @@ def test_spark_rule_results_partition_invariant(spark):
     assert ka == kb
     # 9 docs × 1 kept table × 22 rules
     assert len(ka) == 9 * 22
+
+
+@pytest.mark.parametrize("fmt", sorted(_FORMAT_CASES))
+def test_spark_rule_results_every_format(spark, fmt):
+    """Every table format through the one Spark kernel: the rows do not
+    depend on the partition count, equal a driver-side oracle (core
+    extractor → min-size filter → battery), and a garbage doc never
+    fails the task — any row it yields is a PARSE quarantine row.  A
+    null content makes the extractor raise: one PARSE row."""
+    build, extract, kept_per_variant = _FORMAT_CASES[fmt]
+    docs = [(str(i), build(i, f"page prose {i}")) for i in range(9)]
+    rows = [(d, bytearray(c)) for d, c in docs + [("bad", _GARBAGE)]]
+    rows.append(("null", None))
+
+    def collect(n_parts):
+        df = spark.createDataFrame(
+            rows, "doc_id string, content binary"
+        ).repartition(n_parts)
+        return sorted(map(tuple, WT.table_rule_results(df, fmt).collect()))
+
+    a = collect(1)
+    assert a == collect(7)
+    good = [r for r in a if r[0] not in ("bad", "null")]
+    assert good == _oracle_rows(extract, docs)
+    assert len(good) == 3 * sum(kept_per_variant) * 22
+    bad = [r for r in a if r[0] == "bad"]
+    assert all(r[1] == -1 and r[4] == "PARSE" and not r[5] for r in bad)
+    (null,) = [r for r in a if r[0] == "null"]
+    assert null[1:6] == (-1, 0, 0, "PARSE", False)
+    assert null[6].startswith(f"{fmt} table extract failed: ")
 
 
 def test_spark_table_stats_counts(spark):

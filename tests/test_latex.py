@@ -139,7 +139,7 @@ def test_tex_grids_equal_html_variant_grids():
         page = (
             "<html><body>" + WT.VARIANT_TABLES[v] + "</body></html>"
         ).encode()
-        hg, err = WT._page_grids(Row(page))
+        hg, err = WT._grids("html", Row(page))
         assert err is None
         assert tg == hg, (v, tg, hg)
 

@@ -122,7 +122,7 @@ def test_md_table_rules_equal_csv_battery(spark):
     from machine_readability_checker_spark.core.html import table_grid_to_csv
     from machine_readability_checker_spark.core.zones import extract_zones
     from machine_readability_checker_spark.operators.webtables import (
-        md_table_rule_results,
+        table_rule_results,
     )
 
     md = (
@@ -143,7 +143,7 @@ def test_md_table_rules_equal_csv_battery(spark):
     df = spark.createDataFrame(
         [("d0", bytearray(md.encode()))], "doc_id string, content binary"
     )
-    rows = md_table_rule_results(df).collect()
+    rows = table_rule_results(df, "md").collect()
     got = {(r.rule_id, r.passed, r.message) for r in rows}
     assert got == want
     assert all(r.n_rows == 4 and r.n_cols == 3 for r in rows)

@@ -12,7 +12,9 @@ Covers:
   ``__spark_entry__`` (``_PDF_WT_FAILS`` / ``_PDF_WT_DIMS``) — drift
   in the PDF writer, flate path, run parser, line clustering, block
   detector, densifier, or checks breaks here first;
-- the Spark operators end-to-end (partition invariance, quarantine).
+- the Spark operators end-to-end (partition invariance, quarantine;
+  the oracle check for every table format is in
+  ``tests/test_html_tables.py``).
 """
 
 from __future__ import annotations
@@ -177,8 +179,8 @@ def _docs_df(spark, n_docs: int, n_parts: int):
 
 
 def test_spark_pdf_rule_results_partition_invariant(spark):
-    a = WT.pdf_table_rule_results(_docs_df(spark, 9, 1))
-    b = WT.pdf_table_rule_results(_docs_df(spark, 9, 7))
+    a = WT.table_rule_results(_docs_df(spark, 9, 1), "pdf")
+    b = WT.table_rule_results(_docs_df(spark, 9, 7), "pdf")
     ka = sorted(map(tuple, a.collect()))
     kb = sorted(map(tuple, b.collect()))
     assert ka == kb
@@ -187,7 +189,7 @@ def test_spark_pdf_rule_results_partition_invariant(spark):
 
 
 def test_spark_pdf_table_stats_counts(spark):
-    stats = WT.pdf_table_stats(_docs_df(spark, 9, 4)).collect()
+    stats = WT.table_stats(_docs_df(spark, 9, 4), "pdf").collect()
     assert len(stats) == 3 + 3 + 3 * 2
     assert all(r.kept for r in stats)
 
@@ -199,7 +201,7 @@ def test_corrupt_pdf_quarantines_not_raises(spark):
         ("notpdf", bytearray(b"\xff\xfegarbage")),
     ]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
-    out = WT.pdf_table_rule_results(df).collect()
+    out = WT.table_rule_results(df, "pdf").collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
