@@ -12,7 +12,7 @@ their observed behavior:
 - multi-value cell pattern    — reference ``level1_checker.py:743``
 - unclear-header test         — reference ``level1_checker.py:885-899``
 
-Everything here is pure stdlib + pandas and is deterministic.
+Everything here is pure stdlib and is deterministic.
 """
 
 from __future__ import annotations
@@ -20,8 +20,6 @@ from __future__ import annotations
 import math
 import re
 from typing import Any, Tuple
-
-import pandas as pd
 
 # ---------------------------------------------------------------- A1 helpers
 
@@ -78,37 +76,8 @@ _MULTI_VALUE_RE = re.compile(MULTI_VALUE_PATTERN)
 _NON_NUMERIC_CHAR_RE = re.compile(r"[^\d.\-]")
 
 
-# Memo tables for the pure string predicates below.  Cell values repeat
-# heavily in real tables (categorical columns, repeated labels), so a
-# dict hit replaces the regex search / strip+float parse for every
-# repeat.  On the synthetic bench corpus (~1.1k distinct values across
-# 1.35M predicate calls) this is roughly cost-neutral — the surrounding
-# per-cell loop dominates — but on corpora with longer or
-# pattern-heavier cells the saved regex work is real, and the memo never
-# loses.  Bounded so a long-lived executor scanning high-cardinality
-# corpora cannot grow them without limit; clearing resets amortization,
-# never correctness (the predicates are pure).  Bounds are deliberately
-# small (ADVICE r2): 50k entries ≈ single-digit MB of repeated labels,
-# and values longer than _MEMO_MAX_LEN are never memoized — long
-# strings are the least likely to repeat and the costliest to retain,
-# so each long-lived worker stays far under the hundreds-of-MB ceiling
-# the 500k/unbounded-length combination allowed.
-_MEMO_MAX = 50_000
-_MEMO_MAX_LEN = 256
-_PLATFORM_MEMO: dict = {}
-_CLEAN_NUMERIC_MEMO: dict = {}
-
-
 def detect_platform_characters(text: str) -> bool:
-    if len(text) > _MEMO_MAX_LEN:
-        return _PLATFORM_RE.search(text) is not None
-    hit = _PLATFORM_MEMO.get(text)
-    if hit is None:
-        hit = _PLATFORM_RE.search(text) is not None
-        if len(_PLATFORM_MEMO) >= _MEMO_MAX:
-            _PLATFORM_MEMO.clear()
-        _PLATFORM_MEMO[text] = hit
-    return hit
+    return _PLATFORM_RE.search(text) is not None
 
 
 def is_clean_numeric(val: Any) -> bool:
@@ -120,41 +89,15 @@ def is_clean_numeric(val: Any) -> bool:
     if isinstance(val, (int, float)):
         return True
     if isinstance(val, str):
-        if len(val) > _MEMO_MAX_LEN:
-            return _clean_numeric_uncached(val)
-        hit = _CLEAN_NUMERIC_MEMO.get(val)
-        if hit is None:
-            hit = _clean_numeric_uncached(val)
-            if len(_CLEAN_NUMERIC_MEMO) >= _MEMO_MAX:
-                _CLEAN_NUMERIC_MEMO.clear()
-            _CLEAN_NUMERIC_MEMO[val] = hit
-        return hit
+        s = val.strip()
+        if _NON_NUMERIC_CHAR_RE.search(s):
+            return False
+        try:
+            float(s)
+            return True
+        except ValueError:
+            return False
     return False
-
-
-def _clean_numeric_uncached(val: str) -> bool:
-    s = val.strip()
-    if _NON_NUMERIC_CHAR_RE.search(s):
-        return False
-    try:
-        float(s)
-        return True
-    except ValueError:
-        return False
-
-
-def is_clean_numeric_series(series: pd.Series) -> pd.Series:
-    """Vectorized `is_clean_numeric` over a series.
-
-    Numeric-dtype columns short-circuit to all-True (every value is a real
-    int/float, incl. NaN — the reference admits them via isinstance);
-    object columns take one pass through the scalar predicate."""
-    if pd.api.types.is_numeric_dtype(series) or pd.api.types.is_bool_dtype(series):
-        return pd.Series(True, index=series.index)
-    return pd.Series(
-        [is_clean_numeric(v) for v in series.to_numpy(dtype=object)],
-        index=series.index,
-    )
 
 
 # Japanese free-text column markers (その他:, 備考:, コメント:, …).
@@ -179,6 +122,13 @@ FREE_TEXT_PATTERN = re.compile(
     )
 """,
     re.VERBOSE,
+)
+# Every FREE_TEXT_PATTERN match contains one of these words, so a text
+# holding none of them holds no free-text marker (the checks' cheap
+# prefilter; keep the two in step).
+FREE_TEXT_KEYWORDS_RE = re.compile(
+    "その他|そのほか|コメント|自由記述|詳細|備考|補足|感想|意見|メモ|特記事項"
+    "|注釈|自己PR|フリーテキスト|フリー回答"
 )
 
 # 36-entry missing-value vocabulary; matching is strip().lower() ∈ set.

@@ -15,20 +15,44 @@ Checks are vectorized with pandas/numpy where the reference used
 ``iterrows`` loops; outputs (including Japanese message strings, finding
 order, sample caps and truncations) are preserved bit-for-bit because the
 fixture oracle asserts on them.
+
+Column profile.  The body is turned into one object array per document
+(``_cells``/``_columns``), and each column whose every value is a ``str``
+is factorized once (``_profiles``): codes, distinct values, and one text
+of the distinct values joined by ``"\\x00"``, a character no check
+pattern matches.  All three are cached in ``DataFrame.attrs``.
+
+- Cell predicates run once per distinct value, and numpy gathers them back
+  by code: empty and number-like for multi-table detection, clean-numeric
+  for X-01, missing-value for L1-09, the distinct set for X-03.  A column
+  whose joined text is all decimal-digit runs is classified by that one
+  regex match, without running any predicate.
+- Fast negatives: the "does any cell contain X" checks (L1-06, L1-07,
+  L1-08, L1-14) search the joined text once, in C; X-02 searches it for
+  the free-text keywords and confirms a hit per distinct value with
+  ``FREE_TEXT_PATTERN``.  A column without a hit is done.
+
+The per-cell walk still runs where the profile cannot answer: for a column
+with a hit, because the failure message needs each cell's coordinates,
+scan order, 10-sample cap and sort; and for object columns that mix types
+(blank cells read as NaN, numbers from workbooks), because ``factorize``
+treats ``1``, ``1.0`` and ``True`` as one value.  The predicates stay in
+Python, since ``\\d``, ``isdigit`` and ``strip`` are Unicode-aware.
+``tests/test_checks_profile.py`` holds the profiled battery equal to the
+per-cell walk.
 """
 
 from __future__ import annotations
 
-import math
 import re
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterator, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 
 from . import cells as C
 from .grid import ParsedDoc
-from .zones import ZoneContext, is_empty_cell
+from .zones import ZoneContext, _is_numeric_like, is_empty_cell
 
 CheckResult = Tuple[bool, str]
 
@@ -52,21 +76,94 @@ def _grid_row_nonempty(row: List[Any]) -> bool:
     return any(not is_empty_cell(v) for v in row)
 
 
-def _columns(body: pd.DataFrame) -> List[Tuple[pd.Series, np.ndarray]]:
-    """Per-document cache of ``(series, object-values)`` per column.
-
-    Six checks iterate the body column-wise; repeated ``.iloc[:, c]``
-    slicing (a fresh Series + block manager walk each time) dominated the
-    kernel profile on small grids.  The cache lives in ``DataFrame.attrs``
-    so it amortizes across all checks run on the same body."""
-    cached = body.attrs.get("_col_cache")
+def _cells(body: pd.DataFrame) -> np.ndarray:
+    """The body as one 2-D object array, built once per document and
+    cached in ``DataFrame.attrs`` so every check shares it."""
+    cached = body.attrs.get("_cells")
     if cached is None:
-        cached = []
-        for c in range(body.shape[1]):
-            s = body.iloc[:, c]
-            cached.append((s, s.to_numpy(dtype=object)))
-        body.attrs["_col_cache"] = cached
+        cached = body.to_numpy(dtype=object)
+        body.attrs["_cells"] = cached
     return cached
+
+
+def _columns(body: pd.DataFrame) -> List[Tuple[np.dtype, np.ndarray]]:
+    """Per-document cache of ``(dtype, object-values)`` per column, cut
+    from the one :func:`_cells` array (a per-column ``iloc`` Series costs
+    a block-manager walk each)."""
+    cached = body.attrs.get("_columns")
+    if cached is None:
+        cached = list(zip(body.dtypes, np.ascontiguousarray(_cells(body).T)))
+        body.attrs["_columns"] = cached
+    return cached
+
+
+# Joins a column's distinct values into one text.  No check pattern
+# matches it, so a search of the joined text finds exactly what a search
+# of each value would (plus nothing across the seams).
+_SEP = "\x00"
+_DIGITS_RE = re.compile(r"\d+(?:\x00\d+)*")
+
+
+class _Profile(NamedTuple):
+    """One all-``str`` body column, factorized: ``uniques[codes]`` is the
+    column, ``text`` is its distinct values joined by ``_SEP``, and
+    ``digits`` says every value is a run of decimal digits."""
+
+    codes: np.ndarray
+    uniques: np.ndarray
+    text: str
+    digits: bool
+
+    def flags(self, pred: Callable[[str], bool], on_digits: bool) -> np.ndarray:
+        """``pred`` per cell, run once per distinct value; a digits-only
+        column takes ``on_digits`` for every cell without running it."""
+        if self.digits:
+            return np.full(len(self.codes), on_digits)
+        per_value = np.fromiter(map(pred, self.uniques), bool, len(self.uniques))
+        return per_value[self.codes]
+
+
+def _profile(dtype: np.dtype, vals: np.ndarray) -> Optional[_Profile]:
+    # only all-str columns: factorize would fold 1, 1.0 and True together
+    if dtype != object or pd.api.types.infer_dtype(vals, skipna=False) != "string":
+        return None
+    codes, uniques = pd.factorize(vals)
+    text = _SEP.join(uniques)
+    digits = (
+        text.count(_SEP) == len(uniques) - 1  # no value holds the separator
+        and _DIGITS_RE.fullmatch(text) is not None
+    )
+    return _Profile(codes, uniques, text, digits)
+
+
+def _profiles(body: pd.DataFrame) -> List[Optional[_Profile]]:
+    """Per-column :class:`_Profile` (``None`` for a column that is not
+    all-``str``), cached in ``DataFrame.attrs`` like :func:`_columns`."""
+    cached = body.attrs.get("_profiles")
+    if cached is None:
+        cached = [_profile(dtype, vals) for dtype, vals in _columns(body)]
+        body.attrs["_profiles"] = cached
+    return cached
+
+
+def _str_hits(
+    body: pd.DataFrame, hit_text: Callable[[str], Any], pred: Callable[[str], Any]
+) -> Iterator[Tuple[int, int, str]]:
+    """``(row_idx, col_idx, value)`` of each ``str`` cell ``pred`` flags,
+    in row-major scan order.  A column whose dtype cannot hold a ``str``,
+    or a profiled column whose joined text ``hit_text`` finds nothing in,
+    cannot flag a cell, so the walk skips it."""
+    cols = [
+        c
+        for c, ((dtype, _), prof) in enumerate(zip(_columns(body), _profiles(body)))
+        if dtype.kind not in "biufcmM" and (prof is None or hit_text(prof.text))
+    ]
+    if not cols:
+        return
+    for row_idx, row_vals in enumerate(_cells(body)[:, cols]):
+        for col_idx, val in zip(cols, row_vals):
+            if isinstance(val, str) and pred(val):
+                yield row_idx, col_idx, val
 
 
 # ------------------------------------------------- multi-table detection
@@ -82,21 +179,26 @@ def detect_multiple_tables(
     if body.empty or len(body) < 3:
         return False, "データが少ないため複数テーブルの検出をスキップ"
 
-    isna = body.isna()
-    notna = (~isna).to_numpy()
+    isna = pd.isna(_cells(body))
+    notna = ~isna
     n_rows, n_cols = body.shape
 
     # per-cell flags with a numeric-dtype fast path: a real number renders
     # to a digit string after stripping '.'/'-' (NaN is excluded by notna),
-    # and never to the empty string.  Object columns take one plain-Python
-    # pass over the raw array — the pandas str-accessor chain this replaces
-    # costs ~10 Series allocations per column, which dominates on the small
-    # grids that make up most real corpora.
+    # and never to the empty string.  A profiled all-str column runs the
+    # predicates once per distinct value; other object columns take one
+    # plain-Python pass over the raw array.
     str_empty = np.zeros((n_rows, n_cols), dtype=bool)
     num_like = np.zeros((n_rows, n_cols), dtype=bool)
-    for c, (col, vals) in enumerate(_columns(body)):
-        if pd.api.types.is_numeric_dtype(col) and not pd.api.types.is_bool_dtype(col):
+    profiles = _profiles(body)
+    for c, (dtype, vals) in enumerate(_columns(body)):
+        if pd.api.types.is_numeric_dtype(dtype) and not pd.api.types.is_bool_dtype(dtype):
             num_like[:, c] = True
+            continue
+        prof = profiles[c]
+        if prof is not None:
+            str_empty[:, c] = prof.flags(lambda u: u.strip() == "", False)
+            num_like[:, c] = prof.flags(lambda u: _is_numeric_like(u.strip()), True)
             continue
         for i, v in enumerate(vals):
             s = str(v).strip()
@@ -105,7 +207,7 @@ def detect_multiple_tables(
             elif s.replace(".", "").replace("-", "").isdigit():
                 num_like[i, c] = True
 
-    empty_mask = isna.to_numpy().all(axis=1) | str_empty.all(axis=1)
+    empty_mask = isna.all(axis=1) | str_empty.all(axis=1)
     empty_rows = np.flatnonzero(empty_mask)
 
     if empty_rows.size > 0:
@@ -372,20 +474,19 @@ def check_no_format_based_semantics(
     return True, "書式ベースの意味づけは検出されませんでした"
 
 
+_FULL_WIDTH_SPACE_RE = re.compile(C.FULL_WIDTH_SPACE)
+
+
 def check_no_whitespace_formatting(
     doc: ParsedDoc, ctx: ZoneContext, body: pd.DataFrame, sheet_idx: int = 0
 ) -> CheckResult:
     sample_cells: List[str] = []
     if doc.fmt not in ("xlsx", "ods", "xlsb"):
         # body-relative coordinates, first-10-in-scan-order cap, then sort
-        arr = body.to_numpy(dtype=object) if not body.empty else []
-        for row_idx, row_vals in enumerate(arr):
-            for col_idx, val in enumerate(row_vals):
-                if isinstance(val, str) and C.FULL_WIDTH_SPACE in val:
-                    cell_ref = f"{C.col_letter(col_idx + 1)}{row_idx + 1}"
-                    sample_cells.append(f"{cell_ref}: '{val.strip()}'")
-                    if len(sample_cells) >= 10:
-                        break
+        search = _FULL_WIDTH_SPACE_RE.search
+        for row_idx, col_idx, val in _str_hits(body, search, search):
+            cell_ref = f"{C.col_letter(col_idx + 1)}{row_idx + 1}"
+            sample_cells.append(f"{cell_ref}: '{val.strip()}'")
             if len(sample_cells) >= 10:
                 break
     else:
@@ -419,12 +520,10 @@ def check_single_data_per_cell(
 ) -> CheckResult:
     problems: List[str] = []
     start = ctx.data_start
-    arr = body.to_numpy(dtype=object) if not body.empty else []
-    for row_idx, row_vals in enumerate(arr):
-        for col_idx, val in enumerate(row_vals):
-            if isinstance(val, str) and C._MULTI_VALUE_RE.search(val):
-                coord = f"{C.col_letter(col_idx + 1)}{row_idx + 1 + start}"
-                problems.append(f"{coord}: {val!r}")
+    search = C._MULTI_VALUE_RE.search
+    for row_idx, col_idx, val in _str_hits(body, search, search):
+        coord = f"{C.col_letter(col_idx + 1)}{row_idx + 1 + start}"
+        problems.append(f"{coord}: {val!r}")
     if problems:
         problems.sort(key=C.a1_sort_key)
         details = "\n- ".join(problems)
@@ -437,12 +536,10 @@ def check_no_platform_dependent_characters(
 ) -> CheckResult:
     issues: List[str] = []
     if doc.fmt not in ("xlsx", "ods", "xlsb"):
-        arr = body.to_numpy(dtype=object) if not body.empty else []
-        for row_idx, row_vals in enumerate(arr):
-            for col_idx, val in enumerate(row_vals):
-                if isinstance(val, str) and C.detect_platform_characters(val):
-                    coord = f"{C.col_letter(col_idx + 1)}{row_idx + 1}"
-                    issues.append(f"{coord}: '{val}'")
+        hits = _str_hits(body, C._PLATFORM_RE.search, C.detect_platform_characters)
+        for row_idx, col_idx, val in hits:
+            coord = f"{C.col_letter(col_idx + 1)}{row_idx + 1}"
+            issues.append(f"{coord}: '{val}'")
     else:
         if not ctx.column_rows:
             return False, "機種依存文字チェックに必要な情報が不足しています"
@@ -470,26 +567,27 @@ def check_numeric_columns_only(
     ``level1_checker.py:833,837``)."""
     problem_cells: Dict[Any, List[str]] = {}
     ridx = body.index
-    for col_idx, (col, vals) in enumerate(_columns(body)):
+    profiles = _profiles(body)
+    for col_idx, (dtype, vals) in enumerate(_columns(body)):
         col_name = body.columns[col_idx] if col_idx < len(body.columns) else col_idx
-        if pd.api.types.is_numeric_dtype(col) or pd.api.types.is_bool_dtype(col):
+        if pd.api.types.is_numeric_dtype(dtype) or pd.api.types.is_bool_dtype(dtype):
             continue  # every non-null value is a real number → all clean
-        present = [
-            (i, v) for i, v in enumerate(vals) if not (v is None or v != v)
-        ]
-        if not present:
+        prof = profiles[col_idx]
+        if prof is not None:
+            # every value is a present str; a digit run is clean
+            rows = np.arange(len(vals))
+            clean = prof.flags(C.is_clean_numeric, True)
+        else:
+            rows = np.array(
+                [i for i, v in enumerate(vals) if not (v is None or v != v)], dtype=int
+            )
+            clean = np.array([C.is_clean_numeric(vals[i]) for i in rows], dtype=bool)
+        total, ok = len(rows), int(clean.sum())
+        if not total or not 0.8 <= ok / total < 0.99:
             continue
-        clean = [C.is_clean_numeric(v) for _, v in present]
-        total = len(present)
-        ok = sum(clean)
-        if ok / total < 0.8:
-            continue
-        if ok / total < 0.99:
-            for (i, val), is_ok in zip(present, clean):
-                if is_ok:
-                    continue
-                coord = f"{C.col_letter(col_idx + 1)}{ridx[i] + 1}"
-                problem_cells.setdefault(col_name, []).append(f"{coord}: '{val}'")
+        for i in rows[~clean]:
+            coord = f"{C.col_letter(col_idx + 1)}{ridx[i] + 1}"
+            problem_cells.setdefault(col_name, []).append(f"{coord}: '{vals[i]}'")
     if problem_cells:
         for cs in problem_cells.values():
             cs.sort(key=C.a1_sort_key)
@@ -506,11 +604,20 @@ def check_separate_other_detail_columns(
 ) -> CheckResult:
     flagged: List[str] = []
     search = C.FREE_TEXT_PATTERN.search
-    for col_idx, (series, vals) in enumerate(_columns(body)):
+    profiles = _profiles(body)
+    for col_idx, (dtype, vals) in enumerate(_columns(body)):
         col_name = body.columns[col_idx] if col_idx < len(body.columns) else col_idx
-        if pd.api.types.is_numeric_dtype(series):
+        if pd.api.types.is_numeric_dtype(dtype):
             continue
-        if any(isinstance(v, str) and search(v) for v in vals):
+        prof = profiles[col_idx]
+        if prof is not None:
+            # a marker needs one of its keywords; confirm per distinct value
+            hit = C.FREE_TEXT_KEYWORDS_RE.search(prof.text) is not None and any(
+                search(u) for u in prof.uniques
+            )
+        else:
+            hit = any(isinstance(v, str) and search(v) for v in vals)
+        if hit:
             flagged.append(f"{col_name}（列: {C.col_letter(col_idx + 1)}）")
     if flagged:
         return False, f"選択肢列に自由記述が混在している可能性があります: {flagged}"
@@ -539,16 +646,19 @@ def check_handling_of_missing_values(
     offset = ctx.data_start
     ridx = body.index
     missing = C.MISSING_VALUE_SET
-    for col_idx, (series, vals) in enumerate(_columns(body)):
-        if pd.api.types.is_numeric_dtype(series):
+    is_missing = lambda v: v.strip().lower() in missing  # noqa: E731
+    profiles = _profiles(body)
+    for col_idx, (dtype, vals) in enumerate(_columns(body)):
+        if pd.api.types.is_numeric_dtype(dtype):
             continue  # no string cells possible
-        for i, v in enumerate(vals):
-            if not isinstance(v, str):
-                continue
-            cleaned_val = v.strip()
-            if cleaned_val.lower() in missing:
-                coord = f"{C.col_letter(col_idx + 1)}{ridx[i] + offset + 1}"
-                problems_by_value.setdefault(cleaned_val, []).append(coord)
+        prof = profiles[col_idx]
+        if prof is not None:
+            hits = np.flatnonzero(prof.flags(is_missing, False))
+        else:
+            hits = [i for i, v in enumerate(vals) if isinstance(v, str) and is_missing(v)]
+        for i in hits:
+            coord = f"{C.col_letter(col_idx + 1)}{ridx[i] + offset + 1}"
+            problems_by_value.setdefault(vals[i].strip(), []).append(coord)
 
     if problems_by_value:
         # coordinate lists must be in scan order (column-major, like the
@@ -570,11 +680,15 @@ def check_csv_single_line_per_data(
         return True, "CSVファイルではないためチェック対象外"
     problem_cells: List[str] = []
     ridx = body.index
-    for col_idx, (series, vals) in enumerate(_columns(body)):
+    profiles = _profiles(body)
+    for col_idx, (dtype, vals) in enumerate(_columns(body)):
         if not (
-            pd.api.types.is_string_dtype(series)
-            or pd.api.types.is_object_dtype(series)
+            pd.api.types.is_string_dtype(dtype)
+            or pd.api.types.is_object_dtype(dtype)
         ):
+            continue
+        prof = profiles[col_idx]
+        if prof is not None and "\n" not in prof.text and "\r" not in prof.text:
             continue
         for i, v in enumerate(vals):
             if v is None or v != v:
@@ -600,18 +714,7 @@ def check_csv_fields_quoted(doc: ParsedDoc, ctx, body) -> CheckResult:
     # Reference quirk preserved: it splits each line on ',' and then asks
     # whether any resulting field still contains ',' — which can never be
     # true — so this check always passes on readable files
-    # (``level1_checker.py:1006-1016``).
-    for line in doc.raw_text.splitlines():
-        fields = line.split(",")
-        if any(
-            "," in f and not (f.strip().startswith('"') and f.strip().endswith('"'))
-            for f in fields
-        ):
-            return (
-                False,
-                "カンマを含むフィールドがダブルクォーテーションで囲まれていない"
-                "可能性があります。データが正しく列分割されないリスクがあります。",
-            )
+    # (``level1_checker.py:1006-1016``); the scan that cannot fail is not run.
     return (
         True,
         "フィールドは適切に囲まれているか、またはカンマを含まないことが推測されます",
@@ -625,12 +728,19 @@ def check_code_format_for_choices(
     (<10 distinct non-null values) should be numerically coded — flag
     columns whose small label set mixes digit codes with free labels."""
     flagged: List[str] = []
-    for col_idx, (series, vals) in enumerate(_columns(body)):
+    profiles = _profiles(body)
+    for col_idx, (dtype, vals) in enumerate(_columns(body)):
         col_name = body.columns[col_idx] if col_idx < len(body.columns) else col_idx
-        present = [v for v in vals if not (v is None or v != v)]
-        if not present:
-            continue
-        uniques = {str(v).strip() for v in present}
+        prof = profiles[col_idx]
+        if prof is not None:
+            if prof.digits:
+                continue  # all digit codes: never mixed
+            uniques = {u.strip() for u in prof.uniques}
+        else:
+            present = [v for v in vals if not (v is None or v != v)]
+            if not present:
+                continue
+            uniques = {str(v).strip() for v in present}
         if len(uniques) >= 10:
             continue
         digit_vals = {u for u in uniques if u.isdigit()}

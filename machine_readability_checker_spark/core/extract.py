@@ -40,7 +40,10 @@ def _sheet_spans(ctx: ZoneContext, out: List[Span]) -> None:
         out.append(_mk_span("header", str(col), "", off))
         off += 1
     for row in ctx.data_rows:
-        text = "\t".join(C.render_cell(v) for v in row)
+        try:
+            text = "\t".join(row)  # all-str row: render_cell keeps a str as is
+        except TypeError:
+            text = "\t".join(C.render_cell(v) for v in row)
         out.append(_mk_span("cell", text, "", off))
         off += 1
     for row_idx, row in ctx.lower_rows:

@@ -24,7 +24,11 @@ def crawl_out(spark, tmp_path_factory):
     expected = gen_crawl_warc_files(str(d), N, per_file=60)
     records = read_warc(spark, str(d / "*.warc.gz"))
     out = crawl_curate(records, pr_iters=3, cores=8)
-    return expected, out
+    # materialize each frame the tests read once: they run many actions
+    # on these frames, and an unmaterialized frame re-runs the whole
+    # crawl plan on every action
+    read = ("pages", "spans", "graph", "ranks", "blocked", "dups")
+    return expected, {name: out[name].localCheckpoint(eager=True) for name in read}
 
 
 def test_counts_reconcile_with_generator(crawl_out):
