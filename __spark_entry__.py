@@ -1736,51 +1736,6 @@ def q_redirect_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resolve_redirect_map(edges, max_hops=6).orderBy("src")
 
 
-def _variant_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → deterministic synthetic crawled HTML pages: per-doc
-    prose wrapped around a FIXED per-variant (doc_id % 3) ``<table>``
-    payload, so every table rule outcome is constructively known."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            variant_page,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        variant_page(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    return _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-
-
-def q_html_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-table machine-readability audit: lift each outermost
-    ``<table>`` out of a crawled page into a grid (colspan/rowspan →
-    empty filler), run the reference's full 22-rule battery on it via
-    the shared CSV ingest path, and aggregate pass/fail per page
-    variant.  Two narrow ``mapInPandas`` kernels + one hash aggregate —
-    no other exchange."""
-    res = WT.table_rule_results(_variant_pages(spark, sf_dir))
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
 def q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness-aware frontier scheduling: a synthetic frontier from
     doc_id arithmetic (7 domains, priority cycling mod 13) through the
@@ -2065,133 +2020,14 @@ def _page_metadata_oracle_sql() -> str:
     """
 
 
-def q_md_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """README-table machine-readability audit: the markdown twin of
-    ``html_table_rules`` — each doc becomes a README whose GFM pipe
-    tables densify to grids IDENTICAL to the HTML variants' (empty
-    cells state the span expansion, ``<br>`` the embedded newline), so
-    the two lanes share the hand-derived verdict literals verbatim.
-    Same shape: two narrow mapInPandas kernels + one hash aggregate."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            md_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        md_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.table_rule_results(pages, "md")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
-def q_wiki_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encyclopedia-table machine-readability audit: the MediaWiki twin
-    of ``html_table_rules`` — each doc becomes an article whose
-    ``{| … |}`` wikitables densify to grids IDENTICAL to the HTML
-    variants' (colspan/rowspan attributes use the HTML vocabulary,
-    ``<br>`` the embedded newline, the full-width indent survives the
-    ASCII-only collapse), so the markup lanes share the hand-derived
-    verdict literals verbatim.  Same shape: two narrow mapInPandas
-    kernels + one hash aggregate."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            wiki_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        wiki_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.table_rule_results(pages, "wiki")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
-def q_tex_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paper-table machine-readability audit: the LaTeX twin of
-    ``html_table_rules`` — each doc becomes a .tex fragment whose
-    ``tabular`` environments densify to grids IDENTICAL to the HTML
-    variants' (``\\multicolumn`` fillers state the span expansion,
-    ``\\newline`` the embedded newline, the full-width indent survives
-    the ASCII-only collapse), so the three markup lanes share the
-    hand-derived verdict literals verbatim.  Same shape: two narrow
-    mapInPandas kernels + one hash aggregate."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            tex_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        tex_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-    res = WT.table_rule_results(pages, "tex")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
 def q_html_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-table corpus survey: per captured table its grid dimensions
     and whether it is data-shaped (≥2×2) or a filtered layout/nav
     table — pins the colspan/rowspan occupancy math constructively
     (the 6×3 variant-2 grid only exists if spans expand correctly)."""
-    stats = WT.table_stats(_variant_pages(spark, sf_dir))
+    stats = WT.table_stats(
+        _variant_table_docs(spark, sf_dir, WT.variant_page)
+    )
     return (
         stats.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "table_idx", "n_rows", "n_cols", "kept")
@@ -2200,57 +2036,14 @@ def q_html_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _variant_pdf_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → deterministic synthetic PDF documents: per-doc prose
-    lines around the FIXED per-variant (doc_id % 3) positioned table
-    rows (printed-page twins of ``_variant_pages``)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            variant_pdf,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        variant_pdf(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    return _fan(spark, docs).mapInPandas(kernel, schema="doc_id string, content binary")
-
-
-def q_pdf_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Printed-table machine-readability audit: x-alignment table blocks
-    from the PDF layout lane densify into grids (a row missing a run at
-    a column yields "" — the blank/merged-cell analog) and each grid
-    runs the full 22-rule battery via the shared CSV ingest path — the
-    PDF twin of ``html_table_rules``.  Two narrow ``mapInPandas``
-    kernels + one hash aggregate."""
-    res = WT.table_rule_results(_variant_pdf_docs(spark, sf_dir), "pdf")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
 def q_pdf_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF-table corpus survey: per detected table block its densified
     grid dimensions — pins the column-union densification math (the 4×3
     variant-2 grid with a blank middle cell only exists if the dropped
     run densifies to "")."""
-    stats = WT.table_stats(_variant_pdf_docs(spark, sf_dir), "pdf")
+    stats = WT.table_stats(
+        _variant_table_docs(spark, sf_dir, WT.variant_pdf), "pdf"
+    )
     return (
         stats.withColumn("variant", F.col("doc_id").cast("long") % 3)
         .groupBy("variant", "table_idx", "n_rows", "n_cols", "kept")
@@ -2552,54 +2345,6 @@ _ODF_VARIANT_RULES = {
         ("X-04", False), ("X-05", False), ("X-06", False),
         ("X-07", True)],
 }
-
-
-def q_odf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenDocument extraction end-to-end: per doc, write the fixed
-    variant payload as a real ODS/ODT package, run the full grid or
-    layout lane, keep the span index — the oracle pins the exact
-    ordered (kind, text, media_ref) sequence.  One narrow Arrow-batched
-    ``mapInPandas`` + one hash aggregate, the same 100 TB shape as the
-    other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                fmt, blob, kw = _odf_variant_doc(v)
-                out = extract_document(str(did), fmt, blob, **kw)
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
 
 
 def q_odf_rule_results(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3737,51 +3482,6 @@ _HYBRID_RRF_SQL = """
 """
 
 
-def q_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPUB extraction end-to-end: write the fixed variant container,
-    walk OCF → OPF spine → chapters through the HTML lane, pin the
-    ordered span sequence.  Same narrow mapInPandas + hash aggregate
-    shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(str(did), "epub", _epub_variant_doc(v))
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
 _MD_VARIANT_DOCS = [
     (
         "# Widget Library\n\n"
@@ -3843,78 +3543,6 @@ _MD_VARIANT_SPANS = [
         ("main", "Tail paragraph.", ""),
     ],
 ]
-
-
-def q_md_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markdown extraction end-to-end: three fixed variant documents
-    (ATX + setext headings, inline markup, list, blockquote, fenced
-    code, GFM table, image) flow through the shared extraction kernel
-    (fmt="md"); the oracle states the expected ordered span sequences
-    as literals.  Same narrow mapInPandas + hash aggregate shape as the
-    other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "md", _MD_VARIANT_DOCS[v].encode("utf-8")
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _md_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_MD_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def _ipynb_variant_docs():
@@ -4015,79 +3643,6 @@ _IPYNB_VARIANT_SPANS = [
 ]
 
 
-def q_ipynb_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jupyter notebook extraction end-to-end: three fixed variant
-    notebooks (markdown/code/raw cell dispatch, execute_result +
-    display_data + stream + error outputs, image media refs, ANSI
-    strip, list-form sources) flow through the shared extraction
-    kernel (fmt="ipynb"); the oracle states the expected ordered span
-    sequences as literals.  Same narrow mapInPandas + hash aggregate
-    shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "ipynb", _IPYNB_VARIANT_DOCS[v].encode("utf-8")
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _ipynb_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_IPYNB_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
 _SUBTITLE_VARIANT_DOCS = [
     (
         "srt",
@@ -4125,79 +3680,6 @@ _SUBTITLE_VARIANT_SPANS = [
         ("caption", "earlier", "t=1500-2000"),
     ],
 ]
-
-
-def q_subtitle_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subtitle extraction end-to-end: three fixed variant docs (SRT
-    tags + multi-line cues; WebVTT NOTE blocks, cue ids, settings,
-    short + long timestamps, voice/class tags, entities; BOM +
-    index-less + out-of-order-timestamp SRT with ASS overrides) flow
-    through the shared extraction kernel; the oracle states the
-    expected ordered span sequences as literals.  Same narrow
-    mapInPandas + hash aggregate shape as the other extraction
-    lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                fmt, doc = _SUBTITLE_VARIANT_DOCS[v]
-                out = extract_document(str(did), fmt, doc.encode("utf-8"))
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _subtitle_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_SUBTITLE_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def q_transcript_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4358,80 +3840,6 @@ _LATEX_VARIANT_SPANS = [
 ]
 
 
-def q_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LaTeX extraction end-to-end: three fixed variant documents
-    (preamble title + \\thanks strip, abstract transparency, inline
-    cleanup with verbatim-protected comments, inline vs display math,
-    itemize items, figure/table floats with caption→media alignment,
-    tabular cells) flow through the shared extraction kernel
-    (fmt="tex"); the oracle states the expected ordered span
-    sequences as literals.  Same narrow mapInPandas + hash aggregate
-    shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "tex", _LATEX_VARIANT_DOCS[v].encode("utf-8")
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _latex_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_LATEX_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
 def _doc_variant_docs():
     """Three fixed Word-97 binary documents covering the .doc lane's
     dispatch matrix: heading istd → title + a real table with TTP rows
@@ -4497,79 +3905,6 @@ _DOC_VARIANT_SPANS = [
 ]
 
 
-def q_doc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word 97 binary extraction end-to-end: three fixed variant
-    documents (CFB multi-stream container, FIB, compressed + UTF-16LE
-    piece table, PAPX table/heading properties, field-code strip,
-    footnote/header regions) flow through the shared extraction kernel
-    (fmt="doc"); the oracle states the expected ordered span sequences
-    as literals.  Same narrow mapInPandas + hash aggregate shape as
-    the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "doc", _DOC_VARIANT_DOCS[v]
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _doc_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_DOC_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
 _WIKI_VARIANT_DOCS = [
     # v0: full article — template strip, bold lead + piped link + ref
     # strip, section heading, image caption → media, category drop
@@ -4629,80 +3964,6 @@ _WIKI_VARIANT_SPANS = [
         ("main", "''literal'' stays untouched in this sentence.", ""),
     ],
 ]
-
-
-def q_wiki_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MediaWiki wikitext extraction end-to-end: three fixed variant
-    articles (template strip, link/ref cleanup, image caption → media,
-    redirect handling, math/code blocks, nowiki protection) flow
-    through the shared extraction kernel (fmt="wiki"); the oracle
-    states the expected ordered span sequences as literals.  Same
-    narrow mapInPandas + hash aggregate shape as the other extraction
-    lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "wiki",
-                    _WIKI_VARIANT_DOCS[v].encode("utf-8"),
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _wiki_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_WIKI_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def _hocr_variant_docs():
@@ -4768,78 +4029,6 @@ _HOCR_VARIANT_SPANS = [
          ""),
     ],
 ]
-
-
-def q_hocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hOCR (OCR output) extraction end-to-end: three fixed variant
-    scans (header/caption/photo roles, page-image media refs, entity
-    unescape, orphan lines) flow through the shared extraction kernel
-    (fmt="hocr"); the oracle states the expected ordered span
-    sequences as literals.  Same narrow mapInPandas + hash aggregate
-    shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "hocr", _HOCR_VARIANT_DOCS[v]
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _hocr_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_HOCR_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def q_ocr_conf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4951,78 +4140,6 @@ _PPT_VARIANT_SPANS = [
         ("boilerplate", "tiny", ""),
     ],
 ]
-
-
-def q_ppt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PowerPoint 97 binary extraction end-to-end: three fixed variant
-    decks (CFB record walk, TextHeaderAtom typing, bytes vs UTF-16
-    text atoms, CR paragraph split) flow through the shared extraction
-    kernel (fmt="ppt"); the oracle states the expected ordered span
-    sequences as literals.  Same narrow mapInPandas + hash aggregate
-    shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "ppt", _PPT_VARIANT_DOCS[v]
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _ppt_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_PPT_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def _md_twin(spans):
@@ -5261,79 +4378,6 @@ _EML_VARIANT_SPANS = [
 ]
 
 
-def q_eml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Email extraction end-to-end: three fixed variant messages (MIME
-    multipart walk, transfer decoding, RFC 2047 headers, quote/
-    signature boilerplate, HTML-body routing, attachments → media)
-    flow through the shared extraction kernel (fmt="eml"); the oracle
-    states the expected ordered span sequences as literals.  Same
-    narrow mapInPandas + hash aggregate shape as the other extraction
-    lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "eml", _EML_VARIANT_DOCS[v]
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _eml_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_EML_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
 _DIALECT_VARIANT_DOCS = [
     ("tsv", "k\tv\nalpha\t1\nbeta\t2\n"),
     ("csv", "k;v\nalpha;1\nbeta;2\n"),      # semicolon sniffs
@@ -5349,76 +4393,6 @@ _DIALECT_VARIANT_SPANS = [
     ("cell", "alpha\t1", ""),
     ("cell", "beta\t2", ""),
 ]
-
-
-def q_dialect_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delimiter-dialect ingest: the SAME logical table as true TSV, a
-    semicolon .csv and a pipe .csv must extract identical span
-    sequences (the sniffer only ever fires on comma-free samples, so
-    reference comma parity is untouched — every other csv lane pins
-    that side).  Same narrow mapInPandas + hash aggregate shape."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                fmt, body = _DIALECT_VARIANT_DOCS[v]
-                out = extract_document(str(did), fmt, body.encode())
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _dialect_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_DIALECT_VARIANT_SPANS)
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 _RST_VARIANT_DOCS = [
@@ -5485,123 +4459,6 @@ _RST_VARIANT_SPANS = [
 ]
 
 
-def q_rst_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reStructuredText extraction end-to-end: three fixed variant
-    pages (adornment titles, inline cleanup, figure caption→media
-    alignment, code/math directives, literal blocks, comment and
-    admonition drops, simple + grid tables) flow through the shared
-    extraction kernel (fmt="rst"); the oracle states the expected
-    ordered span sequences as literals.  Same narrow mapInPandas +
-    hash aggregate shape as the other extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "rst",
-                    _RST_VARIANT_DOCS[v].encode("utf-8"),
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _rst_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_RST_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
-def q_rst_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs-site-table machine-readability audit: the reStructuredText
-    twin of ``html_table_rules`` — each doc becomes a Sphinx page
-    whose grid tables' CORNER GEOMETRY expresses the same col/row
-    spans, in-cell line breaks and full-width indents as the HTML
-    variants, so the corner-walk parser must densify to byte-identical
-    grids and the markup lanes share the hand-derived verdict literals
-    verbatim.  Same shape: two narrow mapInPandas kernels + one hash
-    aggregate."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            rst_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        rst_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(
-        kernel, schema="doc_id string, content binary"
-    )
-    res = WT.table_rule_results(pages, "rst")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
 _ADOC_VARIANT_DOCS = [
     # v0: title, inline cleanup, captioned image, source listing,
     # comment/attribute drops
@@ -5657,120 +4514,6 @@ _ADOC_VARIANT_SPANS = [
         ("line", "two\nline\t3", ""),
     ],
 ]
-
-
-def q_adoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AsciiDoc extraction end-to-end: three fixed variant pages
-    (title/heading levels, inline cleanup, captioned images, source/
-    literal/stem blocks, psv tables with span specs and continuation
-    cells) flow through the shared extraction kernel (fmt="adoc"); the
-    oracle states the expected ordered span sequences as literals.
-    Same narrow mapInPandas + hash aggregate shape as the other
-    extraction lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "adoc",
-                    _ADOC_VARIANT_DOCS[v].encode("utf-8"),
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, s in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, s["kind"], s["text"],
-                                 s["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _adoc_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_ADOC_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
-def q_adoc_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manual-page-table audit: the AsciiDoc twin of
-    ``html_table_rules`` — psv cell specs (``3+|``, ``.2+|``) and
-    continuation lines express the same spans and in-cell breaks as
-    the HTML variants, so the lanes share the hand-derived verdict
-    literals verbatim."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            adoc_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        adoc_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(
-        kernel, schema="doc_id string, content binary"
-    )
-    res = WT.table_rule_results(pages, "adoc")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
 
 
 _ORG_VARIANT_DOCS = [
@@ -5834,121 +4577,6 @@ _ORG_VARIANT_SPANS = [
 ]
 
 
-def q_org_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Org-mode extraction end-to-end: three fixed variant pages
-    (#+TITLE keyword, headline TODO/priority/tag stripping, inline
-    cleanup, captioned images, src/fixed-width blocks, LaTeX-fragment
-    math, drawer drops, tables with rule rows and forced-break cells)
-    flow through the shared extraction kernel (fmt="org"); the oracle
-    states the expected ordered span sequences as literals.  Same
-    narrow mapInPandas + hash aggregate shape as the other extraction
-    lanes."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "org",
-                    _ORG_VARIANT_DOCS[v].encode("utf-8"),
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, sp in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, sp["kind"], sp["text"],
-                                 sp["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _org_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_ORG_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
-def q_org_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Org-notes-table audit: the Org-mode twin of ``html_table_rules``
-    — spans authored as explicit filler cells (Org tables cannot merge)
-    and forced-break cells densify to the HTML variants' grids
-    byte-for-byte, so the lanes share the hand-derived verdict literals
-    verbatim."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            org_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        org_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(
-        kernel, schema="doc_id string, content binary"
-    )
-    res = WT.table_rule_results(pages, "org")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
-
-
 _TXT_VARIANT_DOCS = [
     # v0: prose + aligned table + ruler + footer
     (
@@ -6006,78 +4634,6 @@ _TXT_VARIANT_SPANS = [
 ]
 
 
-def q_txt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain-text extraction end-to-end: three fixed variant pages
-    (aligned table with ruler, CJK-wide gutters, and the prose
-    false-positive guard) flow through the shared extraction kernel
-    (fmt="txt"); the oracle states the expected ordered span sequences
-    as literals."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.core.extract import (
-            extract_document,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                did = int(r.doc_id)
-                v = did % 3
-                out = extract_document(
-                    str(did), "txt",
-                    _TXT_VARIANT_DOCS[v].encode("utf-8"),
-                )
-                if out["parse_error"] is not None:
-                    rows.append((str(did), v, -1, "error",
-                                 out["parse_error"], ""))
-                    continue
-                for idx, sp in enumerate(out["spans"]):
-                    rows.append((str(did), v, idx, sp["kind"], sp["text"],
-                                 sp["media_ref"]))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "variant", "idx", "kind", "text",
-                         "media_ref"],
-            )
-
-    spans = _fan(spark, docs).mapInPandas(
-        kernel,
-        schema="doc_id string, variant long, idx int, kind string, "
-               "text string, media_ref string",
-    )
-    return (
-        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("variant", "idx")
-    )
-
-
-def _txt_extract_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_TXT_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
 # Fixed-width plain-text twin: variants 0/1 densify byte-equal to the
 # HTML grids so their verdicts are the shared literals verbatim;
 # variant 2's single-line form of the in-cell-break cell drops the two
@@ -6092,65 +4648,6 @@ _FW_WT_FAILS = {
         "X-04", "X-05", "X-06", "X-07",
     },
 }
-
-
-def _fw_table_rules_oracle_sql() -> str:
-    vals = ",\n      ".join(
-        f"({v}, '{r}', {'FALSE' if r in _FW_WT_FAILS[v] else 'TRUE'})"
-        for v in (0, 1, 2)
-        for r in _WT_RULE_IDS
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, rule_id, passed) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant, e.rule_id, e.passed,
-           c.n AS n_tables
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, rule_id, passed
-    """
-
-
-def q_fw_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Terminal-dump-table audit: the fixed-width plain-text twin of
-    ``html_table_rules`` — display-cell-aware gutter detection must
-    recover the authored grids (CJK-wide alignment included) for the
-    verdict counts to land."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            fw_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        fw_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(
-        kernel, schema="doc_id string, content binary"
-    )
-    res = WT.table_rule_results(pages, "txt")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
 
 
 def q_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6201,47 +4698,6 @@ def _badwords_oracle_sql() -> str:
            COUNT(*) AS n_docs
     FROM t GROUP BY 1, 2 ORDER BY variant, blocked
     """
-
-
-def q_doc_table_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-97-report-table audit: the binary-.doc twin of
-    ``html_table_rules`` — (text, colspan, rowspan) cell specs
-    serialize to TC80 merge flags in each row's sprmTDefTable, and the
-    parser's TAP densification must reproduce the HTML lane's
-    empty-filler grids byte-for-byte, so the lanes share the
-    hand-derived verdict literals verbatim."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as _pd
-
-        from machine_readability_checker_spark.operators.webtables import (
-            doc_variant_doc,
-        )
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": [
-                        str(r.doc_id) for r in pdf.itertuples(index=False)
-                    ],
-                    "content": [
-                        doc_variant_doc(int(r.doc_id), r.text)
-                        for r in pdf.itertuples(index=False)
-                    ],
-                }
-            )
-
-    pages = _fan(spark, docs).mapInPandas(
-        kernel, schema="doc_id string, content binary"
-    )
-    res = WT.table_rule_results(pages, "doc")
-    return (
-        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
-        .groupBy("variant", "rule_id", "passed")
-        .agg(F.count("*").alias("n_tables"))
-        .orderBy("variant", "rule_id", "passed")
-    )
 
 
 def q_crawl_delays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8135,6 +6591,263 @@ ORDER BY doc_id, chunk_idx
 """
 
 
+# ----------------------------------------------------------------------
+# Variant lanes.  Every doc takes the fixed payload variant doc_id % 3,
+# so each lane's result is known up front and its oracle states it as
+# literals.  A variant lane is one row in _VARIANT_EXTRACT_LANES or
+# _VARIANT_TABLE_LANES; tests/test_driver_contract.py pins every
+# extraction row against the single-node core.
+# ----------------------------------------------------------------------
+
+
+def _variant_extract(
+    spark: SparkSession, sf_dir: str, variant_doc: Callable
+) -> DataFrame:
+    """Extraction lane: per doc, run ``extract_document`` on the
+    ``(fmt, content, kwargs)`` payload ``variant_doc(doc_id % 3)`` and
+    keep each span's index; a parse error becomes one ``error`` row at
+    index -1.  One narrow Arrow-batched ``mapInPandas`` + one hash
+    aggregate."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+
+    def kernel(batches):
+        import pandas as _pd
+
+        from machine_readability_checker_spark.core.extract import (
+            extract_document,
+        )
+
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                did = int(r.doc_id)
+                v = did % 3
+                fmt, blob, kw = variant_doc(v)
+                out = extract_document(str(did), fmt, blob, **kw)
+                if out["parse_error"] is not None:
+                    rows.append((str(did), v, -1, "error",
+                                 out["parse_error"], ""))
+                    continue
+                for idx, s in enumerate(out["spans"]):
+                    rows.append((str(did), v, idx, s["kind"], s["text"],
+                                 s["media_ref"]))
+            yield _pd.DataFrame(
+                rows,
+                columns=["doc_id", "variant", "idx", "kind", "text",
+                         "media_ref"],
+            )
+
+    spans = _fan(spark, docs).mapInPandas(
+        kernel,
+        schema="doc_id string, variant long, idx int, kind string, "
+               "text string, media_ref string",
+    )
+    return (
+        spans.groupBy("variant", "idx", "kind", "text", "media_ref")
+        .agg(F.count("*").alias("n_docs"))
+        .orderBy("variant", "idx")
+    )
+
+
+def _variant_extract_oracle_sql(spans) -> str:
+    """Oracle of ``_variant_extract``: ``spans[v]`` is variant v's
+    expected ordered (kind, text, media_ref) list."""
+    vals = ",\n      ".join(
+        "({}, {}, {}, {}, {})".format(
+            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
+        )
+        for v in (0, 1, 2)
+        for idx, (kind, text, media) in enumerate(spans[v])
+    )
+    return f"""
+    WITH counts AS (
+      SELECT doc_id % 3 AS variant, COUNT(*) AS n
+      FROM documents GROUP BY 1
+    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
+      {vals}
+    )
+    SELECT CAST(e.variant AS BIGINT) AS variant,
+           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
+           c.n AS n_docs
+    FROM expect e JOIN counts c ON c.variant = e.variant
+    ORDER BY variant, idx
+    """
+
+
+def _variant_table_docs(
+    spark: SparkSession, sf_dir: str, build: Callable
+) -> DataFrame:
+    """documents → one synthetic document per doc: ``build(doc_id,
+    text)`` wraps the doc's prose around the FIXED per-variant
+    (doc_id % 3) tables, so every table outcome is constructively
+    known."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def kernel(batches):
+        import pandas as _pd
+
+        for pdf in batches:
+            yield _pd.DataFrame(
+                {
+                    "doc_id": [
+                        str(r.doc_id) for r in pdf.itertuples(index=False)
+                    ],
+                    "content": [
+                        build(int(r.doc_id), r.text)
+                        for r in pdf.itertuples(index=False)
+                    ],
+                }
+            )
+
+    return _fan(spark, docs).mapInPandas(
+        kernel, schema="doc_id string, content binary"
+    )
+
+
+def _variant_table_rules(
+    spark: SparkSession, sf_dir: str, fmt: str, build: Callable
+) -> DataFrame:
+    """Table machine-readability audit: each table of the synthetic
+    ``fmt`` documents densifies to a grid, runs the reference's full
+    22-rule battery via the shared CSV ingest path, and pass/fail is
+    counted per variant.  Two narrow ``mapInPandas`` kernels + one hash
+    aggregate — no other exchange."""
+    res = WT.table_rule_results(_variant_table_docs(spark, sf_dir, build), fmt)
+    return (
+        res.withColumn("variant", F.col("doc_id").cast("long") % 3)
+        .groupBy("variant", "rule_id", "passed")
+        .agg(F.count("*").alias("n_tables"))
+        .orderBy("variant", "rule_id", "passed")
+    )
+
+
+# lane name (queried as "<name>_extract") → (variant_doc, spans):
+# variant_doc(v) is the (fmt, content, extract_document kwargs) payload
+# of variant v, spans[v] its expected ordered (kind, text, media_ref)
+# list.  The *_VARIANT_SPANS literals are hand-derived.
+_VARIANT_EXTRACT_LANES = {
+    # OpenDocument: a real ODS/ODT package per doc through the full grid
+    # or layout lane (merged and hidden cells, a two-row merged header)
+    "odf": (_odf_variant_doc, _ODF_VARIANT_SPANS),
+    # EPUB: OCF → OPF spine → chapters through the HTML lane; a
+    # non-linear cover must not extract
+    "epub": (lambda v: ("epub", _epub_variant_doc(v), {}),
+             _EPUB_VARIANT_SPANS),
+    # Markdown: ATX + setext headings, inline markup, list, blockquote,
+    # fenced code, GFM table, image
+    "md": (lambda v: ("md", _MD_VARIANT_DOCS[v].encode("utf-8"), {}),
+           _MD_VARIANT_SPANS),
+    # Jupyter: markdown/code/raw cell dispatch, execute_result +
+    # display_data + stream + error outputs, image media refs, ANSI
+    # strip, list-form sources
+    "ipynb": (lambda v: ("ipynb", _IPYNB_VARIANT_DOCS[v].encode("utf-8"), {}),
+              _IPYNB_VARIANT_SPANS),
+    # subtitles: SRT tags + multi-line cues; WebVTT NOTE blocks, cue
+    # ids, settings, short + long timestamps, voice/class tags,
+    # entities; BOM + index-less + out-of-order SRT with ASS overrides
+    "subtitle": (lambda v: (_SUBTITLE_VARIANT_DOCS[v][0],
+                            _SUBTITLE_VARIANT_DOCS[v][1].encode("utf-8"), {}),
+                 _SUBTITLE_VARIANT_SPANS),
+    # LaTeX: preamble title + \thanks strip, abstract transparency,
+    # verbatim-protected comments, inline vs display math, itemize,
+    # figure/table floats with caption→media alignment, tabular cells
+    "latex": (lambda v: ("tex", _LATEX_VARIANT_DOCS[v].encode("utf-8"), {}),
+              _LATEX_VARIANT_SPANS),
+    # Word 97 binary: CFB multi-stream container, FIB, compressed +
+    # UTF-16LE piece table, PAPX table/heading properties, field-code
+    # strip, footnote/header regions
+    "doc": (lambda v: ("doc", _DOC_VARIANT_DOCS[v], {}), _DOC_VARIANT_SPANS),
+    # MediaWiki: template strip, link/ref cleanup, image caption →
+    # media, redirect handling, math/code blocks, nowiki protection
+    "wiki": (lambda v: ("wiki", _WIKI_VARIANT_DOCS[v].encode("utf-8"), {}),
+             _WIKI_VARIANT_SPANS),
+    # hOCR: header/caption/photo roles, page-image media refs, entity
+    # unescape, orphan lines
+    "hocr": (lambda v: ("hocr", _HOCR_VARIANT_DOCS[v], {}),
+             _HOCR_VARIANT_SPANS),
+    # PowerPoint 97 binary: CFB record walk, TextHeaderAtom typing,
+    # bytes vs UTF-16 text atoms, CR paragraph split
+    "ppt": (lambda v: ("ppt", _PPT_VARIANT_DOCS[v], {}), _PPT_VARIANT_SPANS),
+    # email: MIME multipart walk, transfer decoding, RFC 2047 headers,
+    # quote/signature boilerplate, HTML-body routing, attachments → media
+    "eml": (lambda v: ("eml", _EML_VARIANT_DOCS[v], {}), _EML_VARIANT_SPANS),
+    # delimiter dialects: the SAME table as TSV, semicolon .csv and pipe
+    # .csv extracts one span list (the sniffer only fires on comma-free
+    # samples, so reference comma parity is untouched)
+    "dialect": (lambda v: (_DIALECT_VARIANT_DOCS[v][0],
+                           _DIALECT_VARIANT_DOCS[v][1].encode(), {}),
+                [_DIALECT_VARIANT_SPANS] * 3),
+    # reStructuredText: adornment titles, inline cleanup, figure
+    # caption→media, code/math directives, literal blocks, comment and
+    # admonition drops, simple + grid tables
+    "rst": (lambda v: ("rst", _RST_VARIANT_DOCS[v].encode("utf-8"), {}),
+            _RST_VARIANT_SPANS),
+    # AsciiDoc: title/heading levels, inline cleanup, captioned images,
+    # source/literal/stem blocks, psv tables with span specs and
+    # continuation cells
+    "adoc": (lambda v: ("adoc", _ADOC_VARIANT_DOCS[v].encode("utf-8"), {}),
+             _ADOC_VARIANT_SPANS),
+    # Org-mode: #+TITLE, headline TODO/priority/tag stripping, captioned
+    # images, src/fixed-width blocks, LaTeX-fragment math, drawer drops,
+    # tables with rule rows and forced-break cells
+    "org": (lambda v: ("org", _ORG_VARIANT_DOCS[v].encode("utf-8"), {}),
+            _ORG_VARIANT_SPANS),
+    # plain text: aligned table with ruler, CJK-wide gutters, and the
+    # prose false-positive guard
+    "txt": (lambda v: ("txt", _TXT_VARIANT_DOCS[v].encode("utf-8"), {}),
+            _TXT_VARIANT_SPANS),
+}
+
+
+# lane name (queried as "<name>_table_rules") → (fmt, build): build is
+# the operators/webtables.py variant-document builder.  The markup
+# builders render the HTML variants' grids byte for byte, so those lanes
+# share the verdict literals _WT_FAILS; pdf and fw have their own
+# (_PDF_WT_FAILS, _FW_WT_FAILS).
+_VARIANT_TABLE_LANES = {
+    # outermost <table>s of a crawled page (colspan/rowspan → "" filler)
+    "html": ("html", WT.variant_page),
+    # README GFM pipe tables: empty cells state the span expansion,
+    # <br> the embedded newline
+    "md": ("md", WT.md_variant_doc),
+    # {| … |} wikitables with HTML colspan/rowspan attributes; the
+    # full-width indent survives the ASCII-only collapse
+    "wiki": ("wiki", WT.wiki_variant_doc),
+    # tabular environments: \multicolumn fillers, \newline breaks
+    "tex": ("tex", WT.tex_variant_doc),
+    # x-alignment blocks of the PDF layout lane: a row missing a run at
+    # a column yields "" (the blank/merged-cell analog)
+    "pdf": ("pdf", WT.variant_pdf),
+    # Sphinx grid tables whose corner geometry expresses the spans
+    "rst": ("rst", WT.rst_variant_doc),
+    # psv cell specs (3+|, .2+|) and continuation lines
+    "adoc": ("adoc", WT.adoc_variant_doc),
+    # spans authored as explicit filler cells (Org tables cannot merge)
+    "org": ("org", WT.org_variant_doc),
+    # fixed-width terminal dumps: display-cell-aware gutter detection
+    # must recover the grids, CJK-wide alignment included
+    "fw": ("txt", WT.fw_variant_doc),
+    # Word 97 TC80 merge flags in each row's sprmTDefTable
+    "doc": ("doc", WT.doc_variant_doc),
+}
+
+
+def _extract_lane(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    variant_doc = _VARIANT_EXTRACT_LANES[name][0]
+    return lambda spark, sf_dir: _variant_extract(spark, sf_dir, variant_doc)
+
+
+def _table_rules_lane(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    fmt, build = _VARIANT_TABLE_LANES[name]
+    return lambda spark, sf_dir: _variant_table_rules(
+        spark, sf_dir, fmt, build
+    )
+
+
+def _extract_oracle(name: str) -> str:
+    return _variant_extract_oracle_sql(_VARIANT_EXTRACT_LANES[name][1])
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- Driver sample window (first 50 entries): the external
@@ -8199,9 +6912,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_normalize": q_text_normalize,
         "readability": q_readability,
         "bloom_new_docs": q_bloom_new_docs,
-        "odf_extract": q_odf_extract,
-        "epub_extract": q_epub_extract,
-        "md_extract": q_md_extract,
+        "odf_extract": _extract_lane("odf"),
+        "epub_extract": _extract_lane("epub"),
+        "md_extract": _extract_lane("md"),
         # --- end of sample window ---
         "revenue_by_nation": q_revenue_by_nation,
         "top_orders_per_customer": q_top_orders_per_customer,
@@ -8250,43 +6963,43 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "redirect_map": q_redirect_map,
         "cdx_range_fetch": q_cdx_range_fetch,
         "warc_revisit_dedup": q_warc_revisit_dedup,
-        "html_table_rules": q_html_table_rules,
-        "md_table_rules": q_md_table_rules,
-        "wiki_table_rules": q_wiki_table_rules,
+        "html_table_rules": _table_rules_lane("html"),
+        "md_table_rules": _table_rules_lane("md"),
+        "wiki_table_rules": _table_rules_lane("wiki"),
         "page_metadata": q_page_metadata,
         "feed_entries": q_feed_entries,
         "frontier_schedule": q_frontier_schedule,
         "html_table_stats": q_html_table_stats,
-        "pdf_table_rules": q_pdf_table_rules,
+        "pdf_table_rules": _table_rules_lane("pdf"),
         "pdf_table_stats": q_pdf_table_stats,
         "pdf_cjk_extract": q_pdf_cjk_extract,
         "pdf_columns_extract": q_pdf_columns_extract,
         "odf_rule_results": q_odf_rule_results,
-        "ipynb_extract": q_ipynb_extract,
-        "subtitle_extract": q_subtitle_extract,
+        "ipynb_extract": _extract_lane("ipynb"),
+        "subtitle_extract": _extract_lane("subtitle"),
         "transcript_windows": q_transcript_windows,
-        "latex_extract": q_latex_extract,
-        "tex_table_rules": q_tex_table_rules,
-        "doc_extract": q_doc_extract,
-        "wiki_extract": q_wiki_extract,
-        "hocr_extract": q_hocr_extract,
+        "latex_extract": _extract_lane("latex"),
+        "tex_table_rules": _table_rules_lane("tex"),
+        "doc_extract": _extract_lane("doc"),
+        "wiki_extract": _extract_lane("wiki"),
+        "hocr_extract": _extract_lane("hocr"),
         "ocr_conf_stats": q_ocr_conf_stats,
-        "ppt_extract": q_ppt_extract,
+        "ppt_extract": _extract_lane("ppt"),
         "render_text": q_render_text,
         "wiki_links": q_wiki_links,
-        "eml_extract": q_eml_extract,
-        "dialect_extract": q_dialect_extract,
-        "rst_extract": q_rst_extract,
-        "rst_table_rules": q_rst_table_rules,
+        "eml_extract": _extract_lane("eml"),
+        "dialect_extract": _extract_lane("dialect"),
+        "rst_extract": _extract_lane("rst"),
+        "rst_table_rules": _table_rules_lane("rst"),
         "crawl_delays": q_crawl_delays,
-        "adoc_extract": q_adoc_extract,
-        "adoc_table_rules": q_adoc_table_rules,
-        "doc_table_rules": q_doc_table_rules,
+        "adoc_extract": _extract_lane("adoc"),
+        "adoc_table_rules": _table_rules_lane("adoc"),
+        "doc_table_rules": _table_rules_lane("doc"),
         "badwords_filter": q_badwords_filter,
-        "fw_table_rules": q_fw_table_rules,
-        "txt_extract": q_txt_extract,
-        "org_extract": q_org_extract,
-        "org_table_rules": q_org_table_rules,
+        "fw_table_rules": _table_rules_lane("fw"),
+        "txt_extract": _extract_lane("txt"),
+        "org_extract": _extract_lane("org"),
+        "org_table_rules": _table_rules_lane("org"),
         "auto_orient": q_auto_orient,
         "dsir_weights": q_dsir_weights,
         "pack_sequences": q_pack_sequences,
@@ -8430,9 +7143,9 @@ def oracle_sql() -> dict[str, str]:
     out["redirect_map"] = _REDIRECT_MAP_SQL
     out["cdx_range_fetch"] = _CDX_RANGE_FETCH_SQL
     out["warc_revisit_dedup"] = _WARC_REVISIT_DEDUP_SQL
-    out["html_table_rules"] = _html_table_rules_oracle_sql()
+    out["html_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
     # md grids == html grids by construction → identical verdict matrix
-    out["md_table_rules"] = _html_table_rules_oracle_sql()
+    out["md_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
     out["page_metadata"] = _page_metadata_oracle_sql()
     out["feed_entries"] = _feed_entries_oracle_sql()
     out["frontier_schedule"] = _FRONTIER_SQL
@@ -8441,37 +7154,37 @@ def oracle_sql() -> dict[str, str]:
     out["pdf_table_stats"] = _pdf_table_stats_oracle_sql()
     out["pdf_cjk_extract"] = _pdf_cjk_oracle_sql()
     out["pdf_columns_extract"] = _pdf_columns_oracle_sql()
-    out["odf_extract"] = _odf_extract_oracle_sql()
+    out["odf_extract"] = _extract_oracle("odf")
     out["odf_rule_results"] = _odf_rules_oracle_sql()
     out["ngram_lm_ppl"] = _NGRAM_LM_SQL
-    out["epub_extract"] = _epub_extract_oracle_sql()
-    out["md_extract"] = _md_extract_oracle_sql()
-    out["ipynb_extract"] = _ipynb_extract_oracle_sql()
-    out["subtitle_extract"] = _subtitle_extract_oracle_sql()
+    out["epub_extract"] = _extract_oracle("epub")
+    out["md_extract"] = _extract_oracle("md")
+    out["ipynb_extract"] = _extract_oracle("ipynb")
+    out["subtitle_extract"] = _extract_oracle("subtitle")
     out["transcript_windows"] = _TRANSCRIPT_WINDOWS_SQL
-    out["latex_extract"] = _latex_extract_oracle_sql()
-    out["tex_table_rules"] = _html_table_rules_oracle_sql()
-    out["doc_extract"] = _doc_extract_oracle_sql()
-    out["wiki_extract"] = _wiki_extract_oracle_sql()
-    out["wiki_table_rules"] = _html_table_rules_oracle_sql()
-    out["hocr_extract"] = _hocr_extract_oracle_sql()
+    out["latex_extract"] = _extract_oracle("latex")
+    out["tex_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
+    out["doc_extract"] = _extract_oracle("doc")
+    out["wiki_extract"] = _extract_oracle("wiki")
+    out["wiki_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
+    out["hocr_extract"] = _extract_oracle("hocr")
     out["ocr_conf_stats"] = _ocr_conf_stats_oracle_sql()
-    out["ppt_extract"] = _ppt_extract_oracle_sql()
+    out["ppt_extract"] = _extract_oracle("ppt")
     out["render_text"] = _render_text_oracle_sql()
     out["wiki_links"] = _wiki_links_oracle_sql()
-    out["eml_extract"] = _eml_extract_oracle_sql()
-    out["dialect_extract"] = _dialect_extract_oracle_sql()
-    out["rst_extract"] = _rst_extract_oracle_sql()
-    out["rst_table_rules"] = _html_table_rules_oracle_sql()
+    out["eml_extract"] = _extract_oracle("eml")
+    out["dialect_extract"] = _extract_oracle("dialect")
+    out["rst_extract"] = _extract_oracle("rst")
+    out["rst_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
     out["crawl_delays"] = _crawl_delays_oracle_sql()
-    out["adoc_extract"] = _adoc_extract_oracle_sql()
-    out["adoc_table_rules"] = _html_table_rules_oracle_sql()
-    out["doc_table_rules"] = _html_table_rules_oracle_sql()
+    out["adoc_extract"] = _extract_oracle("adoc")
+    out["adoc_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
+    out["doc_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
     out["badwords_filter"] = _badwords_oracle_sql()
-    out["fw_table_rules"] = _fw_table_rules_oracle_sql()
-    out["txt_extract"] = _txt_extract_oracle_sql()
-    out["org_extract"] = _org_extract_oracle_sql()
-    out["org_table_rules"] = _html_table_rules_oracle_sql()
+    out["fw_table_rules"] = _table_rules_oracle_sql(_FW_WT_FAILS)
+    out["txt_extract"] = _extract_oracle("txt")
+    out["org_extract"] = _extract_oracle("org")
+    out["org_table_rules"] = _table_rules_oracle_sql(_WT_FAILS)
     out["bm25_topk"] = _BM25_SQL
     out["hybrid_rrf_topk"] = _HYBRID_RRF_SQL
     out["span_regression_diff"] = _SPAN_DIFF_SQL
@@ -9585,7 +8298,7 @@ _REDIRECT_MAP_SQL = """
 """
 
 
-# mirrors q_html_table_rules: the per-variant table payloads are fixed
+# mirrors the html_table_rules lane: the per-variant table payloads are fixed
 # (operators/webtables.py VARIANT_TABLES), so the battery outcome per
 # (variant, rule) is a constant — the Spark side computes it THROUGH
 # html-parse → grid capture → CSV round-trip → 22-rule battery, the
@@ -9611,9 +8324,11 @@ _WT_DIMS = {
 }
 
 
-def _html_table_rules_oracle_sql() -> str:
+def _table_rules_oracle_sql(fails) -> str:
+    """Oracle of a ``<name>_table_rules`` lane with one table per doc:
+    ``fails[v]`` is the set of rule ids variant v's table fails."""
     vals = ",\n      ".join(
-        f"({v}, '{r}', {'FALSE' if r in _WT_FAILS[v] else 'TRUE'})"
+        f"({v}, '{r}', {'FALSE' if r in fails[v] else 'TRUE'})"
         for v in (0, 1, 2)
         for r in _WT_RULE_IDS
     )
@@ -9654,13 +8369,13 @@ def _html_table_stats_oracle_sql() -> str:
     """
 
 
-# mirrors q_pdf_table_rules / q_pdf_table_stats: the per-variant PDF
-# table payloads are fixed (operators/webtables.py PDF_VARIANT_ROWS), so
-# the battery outcome per (variant, rule) is a constant — the Spark side
-# computes it THROUGH pdf-write → flate inflate → text-run parse → line
-# cluster → x-alignment block → densify → CSV round-trip → battery; the
-# oracle states it as literals (pinned against the single-node core by
-# tests/test_pdf_tables.py).
+# mirrors the pdf_table_rules lane and q_pdf_table_stats: the
+# per-variant PDF table payloads are fixed (operators/webtables.py
+# PDF_VARIANT_ROWS), so the battery outcome per (variant, rule) is a
+# constant — the Spark side computes it THROUGH pdf-write → flate
+# inflate → text-run parse → line cluster → x-alignment block → densify
+# → CSV round-trip → battery; the oracle states it as literals (pinned
+# against the single-node core by tests/test_pdf_tables.py).
 _PDF_WT_FAILS = {
     0: {"X-04", "X-05", "X-06", "X-07"},
     1: {"L1-07", "L1-09", "X-03", "X-04", "X-05", "X-06", "X-07"},
@@ -9822,61 +8537,6 @@ def _sql_str(s: str) -> str:
         .replace("\n", "' || chr(10) || '")
         + "'"
     )
-
-
-def _odf_extract_oracle_sql() -> str:
-    """Mirrors ``q_odf_extract``: the Spark side computes the rows
-    THROUGH ods/odt-write → zip/XML parse → zone split (grid) or layout
-    classification (text) → span assembly; the oracle states the
-    expected ordered spans as literals (pinned against the single-node
-    core by tests/test_odf.py)."""
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_ODF_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
-
-
-def _epub_extract_oracle_sql() -> str:
-    """Mirrors ``q_epub_extract``: the Spark side computes the rows
-    THROUGH epub-write → OCF/OPF walk → HTML block classification; the
-    oracle states the expected ordered spans as literals (pinned by
-    tests/test_epub.py)."""
-    vals = ",\n      ".join(
-        "({}, {}, {}, {}, {})".format(
-            v, idx, _sql_str(kind), _sql_str(text), _sql_str(media)
-        )
-        for v in (0, 1, 2)
-        for idx, (kind, text, media) in enumerate(_EPUB_VARIANT_SPANS[v])
-    )
-    return f"""
-    WITH counts AS (
-      SELECT doc_id % 3 AS variant, COUNT(*) AS n
-      FROM documents GROUP BY 1
-    ), expect(variant, idx, kind, text, media_ref) AS (VALUES
-      {vals}
-    )
-    SELECT CAST(e.variant AS BIGINT) AS variant,
-           CAST(e.idx AS INT) AS idx, e.kind, e.text, e.media_ref,
-           c.n AS n_docs
-    FROM expect e JOIN counts c ON c.variant = e.variant
-    ORDER BY variant, idx
-    """
 
 
 def _odf_rules_oracle_sql() -> str:

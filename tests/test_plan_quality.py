@@ -269,10 +269,28 @@ def test_html_table_rules_single_exchange(spark):
     (page synth, grid battery) + one hash aggregate: the only exchange
     in the plan must be that aggregate's — any second exchange means a
     shuffle crept in between the kernels."""
-    df = E.q_html_table_rules(spark, SF)
+    df = E.queries()["html_table_rules"](spark, SF)
     plan = _plan(df)
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("MapInPandas") == 2
+
+
+_VARIANT_LANES = sorted(
+    [f"{n}_table_rules" for n in E._VARIANT_TABLE_LANES if n != "html"]
+    + ["html_table_stats", "pdf_table_stats"]
+    + [f"{n}_extract" for n in E._VARIANT_EXTRACT_LANES]
+)
+
+
+@pytest.mark.parametrize("lane", _VARIANT_LANES)
+def test_variant_lane_plan_shape(spark, lane):
+    """Every other variant lane keeps the same shape: narrow kernels (a
+    document builder + the table kernel for table lanes, the extraction
+    kernel alone otherwise) and one hash aggregate as the only hash
+    exchange."""
+    plan = _plan(E.queries()[lane](spark, SF))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("MapInPandas") == (1 if lane.endswith("_extract") else 2)
 
 
 def test_tfidf_plan_jvm_only_with_group_limit(spark):

@@ -5,7 +5,10 @@ column TYPES (Arrow-level, strict — the driver's value hash is
 type-sensitive, so DuckDB HUGEINT vs Spark BIGINT is a FAIL here even
 when the values are equal), and order-insensitive values.
 
-Usage: python tools/check_oracles.py [sf_dir] [only_query_name]
+Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
+
+With no query names every lane is checked; an unknown name is rejected
+before Spark starts.
 """
 
 from __future__ import annotations
@@ -103,7 +106,16 @@ def rows_to_set(rows, cols):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2] if len(sys.argv) > 2 else None
+    only = set(sys.argv[2:])
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        raise SystemExit(
+            f"unknown query {', '.join(map(repr, unknown))} — nothing "
+            f"checked; valid names: {', '.join(sorted(qs))}"
+        )
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -112,16 +124,9 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
     spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    if only is not None and only not in qs:
-        raise SystemExit(
-            f"unknown query {only!r} — nothing would be checked; "
-            f"valid names: {', '.join(sorted(qs))}"
-        )
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
-        if only and name != only:
+        if only and name not in only:
             continue
         try:
             sdf = fn(spark, sf_dir)
