@@ -5729,12 +5729,14 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hits_oracle_sql() -> str:
     """Unrolled {_HITS_ITERS}-iteration HITS as chained CTEs, term for
     term with operators.linkgraph.hits (coalesced zero-fill, L2 norm
-    via sqrt(SUM(v*v)), guarded zero-norm division)."""
+    via sqrt(SUM(v*v)), guarded zero-norm division).  The ``_raw`` CTEs
+    are MATERIALIZED: each is read twice, and an inlined chain doubles
+    its work at every iteration."""
     parts = ["h0 AS (SELECT doc_id, 1.0 AS hub FROM nodes)"]
     prev_h = "h0"
     for t in range(1, _HITS_ITERS + 1):
         parts.append(f"""
-a{t}_raw AS (
+a{t}_raw AS MATERIALIZED (
   SELECT n.doc_id, COALESCE(s.v, 0) AS v
   FROM nodes n LEFT JOIN (
     SELECT e.dst AS doc_id, SUM(h.hub) AS v
@@ -5746,7 +5748,7 @@ a{t} AS (
          CASE WHEN nn.s > 0 THEN v / nn.s ELSE 0 END AS authority
   FROM a{t}_raw, (SELECT sqrt(SUM(v * v)) AS s FROM a{t}_raw) nn
 ),
-h{t}_raw AS (
+h{t}_raw AS MATERIALIZED (
   SELECT n.doc_id, COALESCE(s.v, 0) AS v
   FROM nodes n LEFT JOIN (
     SELECT e.src AS doc_id, SUM(a.authority) AS v

@@ -21,6 +21,8 @@ from __future__ import annotations
 import struct
 from typing import Dict, List, Optional, Tuple
 
+from .png import PNG_SIG
+
 # IFD0 / Exif tags
 TAG_MAKE = 0x010F
 TAG_MODEL = 0x0110
@@ -199,17 +201,16 @@ def strip_jpeg_metadata(data: bytes) -> bytes:
 #: records (tEXt/zTXt/iTXt), the embedded EXIF blob (eXIf, PNG 1.5),
 #: and the modification timestamp (tIME).
 _PNG_META_CHUNKS = frozenset({b"tEXt", b"zTXt", b"iTXt", b"eXIf", b"tIME"})
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def strip_png_metadata(data: bytes) -> bytes:
     """The same PNG with metadata chunks (tEXt/zTXt/iTXt/eXIf/tIME)
     removed — IDAT and every structural chunk are byte-identical, so
     pixels survive untouched."""
-    if not data.startswith(_PNG_SIG):
+    if not data.startswith(PNG_SIG):
         raise ValueError("not a PNG")
-    out = bytearray(_PNG_SIG)
-    pos = len(_PNG_SIG)
+    out = bytearray(PNG_SIG)
+    pos = len(PNG_SIG)
     while pos + 8 <= len(data):
         (ln,) = struct.unpack(">L", data[pos : pos + 4])
         typ = data[pos + 4 : pos + 8]

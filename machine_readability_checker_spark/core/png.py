@@ -1,5 +1,5 @@
 """Pure-stdlib PNG codec (RFC 2083): the real image decode path behind
-``operators.multimodal.decode_backend``.
+``operators.multimodal.decode_image``.
 
 The container ships no PIL/libvips/ffmpeg, so this implements the subset
 of PNG a training-data pipeline actually meets in the wild for 8-bit

@@ -33,8 +33,7 @@ from ..core.exif import (
     strip_jpeg_metadata,
     strip_png_metadata,
 )
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+from ..core.png import PNG_SIG
 
 EXIF_FIELDS = [
     T.StructField("has_exif", T.BooleanType(), False),
@@ -113,7 +112,7 @@ def _strip_one(content: bytes) -> tuple[bytes, int, Optional[str]]:
     try:
         if content.startswith(b"\xff\xd8"):
             stripped = strip_jpeg_metadata(content)
-        elif content.startswith(_PNG_SIG):
+        elif content.startswith(PNG_SIG):
             stripped = strip_png_metadata(content)
         else:
             return content, 0, None  # unknown container: pass through

@@ -33,10 +33,9 @@ standard LSH pigeonhole argument.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .dedup import hamming64
@@ -135,48 +134,32 @@ def _canonical_pixels(
     return f"{width}x{height}x{a.shape[2]}:".encode() + a.tobytes()
 
 
+def image_hash(content: bytes) -> dict:
+    """Per-blob geometry, exact pixel digest and dHash of one image."""
+    from .multimodal import decode_image
+
+    img = decode_image(content)
+    norm = _canonical_pixels(img.width, img.height, img.channels, img.pixels)
+    gray = _to_gray(img.width, img.height, img.channels, img.pixels)
+    return {
+        "width": img.width,
+        "height": img.height,
+        "pixel_md5": hashlib.md5(norm).hexdigest(),
+        "dhash": dhash_gray(gray),
+    }
+
+
 def image_hashes(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Append (width, height, pixel_md5, dhash, decode_error) to every
     row, decoding ``content_col`` with the real codecs in one Arrow
     kernel.  Undecodable blobs quarantine in place (hashes null,
     ``decode_error`` set) — they can never pair."""
-    from .multimodal import decode_image
+    from .multimodal import map_blobs
 
-    out_schema = T.StructType(list(df.schema.fields) + IMAGE_HASH_FIELDS)
-    cols = df.columns
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, md5s, dhs, errs = [], [], [], [], []
-            for blob in pdf[content_col]:
-                try:
-                    img = decode_image(bytes(blob))
-                    norm = _canonical_pixels(
-                        img.width, img.height, img.channels, img.pixels
-                    )
-                    gray = _to_gray(
-                        img.width, img.height, img.channels, img.pixels
-                    )
-                    ws.append(img.width)
-                    hs.append(img.height)
-                    md5s.append(hashlib.md5(norm).hexdigest())
-                    dhs.append(dhash_gray(gray))
-                    errs.append(None)
-                except Exception as exc:  # quarantine row
-                    ws.append(None)
-                    hs.append(None)
-                    md5s.append(None)
-                    dhs.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = pdf[cols].copy()
-            out["width"] = pd.array(ws, dtype="Int32")
-            out["height"] = pd.array(hs, dtype="Int32")
-            out["pixel_md5"] = md5s
-            out["dhash"] = pd.array(dhs, dtype="Int64")
-            out["decode_error"] = errs
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    return map_blobs(
+        df, T.StructType(list(df.schema.fields) + IMAGE_HASH_FIELDS),
+        image_hash, keys=df.columns, content_col=content_col,
+    )
 
 
 def hamming_band_pairs(

@@ -29,10 +29,9 @@ Haitsma–Kalker band-energy fingerprint and Krawetz dHash.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from .imagehash import _to_gray, dhash_gray, hamming_band_pairs
@@ -137,6 +136,22 @@ MEDIA_FP_FIELDS = [
 ]
 
 
+def media_fingerprint(content: bytes, media_type: str) -> dict:
+    """Per-blob 64-bit fingerprint, by modality: audio → band-energy
+    deltas, video → majority frame-dHash fold, anything else → dHash."""
+    from .multimodal import decode_image
+
+    if media_type == "audio":
+        return {"fingerprint": audio_fingerprint(content)}
+    if media_type == "video":
+        fp, n_frames = video_fold(content)
+        return {"fingerprint": fp, "n_frames": n_frames}
+    img = decode_image(content)
+    return {"fingerprint": dhash_gray(
+        _to_gray(img.width, img.height, img.channels, img.pixels)
+    )}
+
+
 def media_fingerprints(
     df: DataFrame,
     content_col: str = "content",
@@ -145,42 +160,13 @@ def media_fingerprints(
     """Append (fingerprint, n_frames, decode_error) per row in one
     Arrow kernel, dispatching on ``media_type``: image → dHash,
     audio → band-energy deltas, video → majority frame-dHash fold."""
-    from .multimodal import decode_image
+    from .multimodal import map_blobs
 
-    out_schema = T.StructType(list(df.schema.fields) + MEDIA_FP_FIELDS)
-    cols = df.columns
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps: List[Optional[int]] = []
-            nfs: List[Optional[int]] = []
-            errs: List[Optional[str]] = []
-            for mt, blob in zip(pdf[media_type_col], pdf[content_col]):
-                try:
-                    raw = bytes(blob)
-                    if mt == "audio":
-                        fp, nf = audio_fingerprint(raw), None
-                    elif mt == "video":
-                        fp, nf = video_fold(raw)
-                    else:
-                        img = decode_image(raw)
-                        fp, nf = dhash_gray(_to_gray(
-                            img.width, img.height, img.channels, img.pixels
-                        )), None
-                    fps.append(fp)
-                    nfs.append(nf)
-                    errs.append(None)
-                except Exception as exc:
-                    fps.append(None)
-                    nfs.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = pdf[cols].copy()
-            out["fingerprint"] = pd.array(fps, dtype="Int64")
-            out["n_frames"] = pd.array(nfs, dtype="Int32")
-            out["decode_error"] = errs
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    return map_blobs(
+        df, T.StructType(list(df.schema.fields) + MEDIA_FP_FIELDS),
+        media_fingerprint, keys=df.columns, content_col=content_col,
+        arg_col=media_type_col,
+    )
 
 
 def media_near_dups(

@@ -1,27 +1,34 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + typed
 metadata, processed by Arrow-batched ``mapInPandas`` kernels.
 
-Every modality now has a REAL decode path, all dependency-free:
+Every modality has a REAL decode path, all dependency-free:
 
-- **PNG** (``core/png.py``: chunk parse + zlib inflate + all five
-  scanline filters; 8-bit gray/RGB/RGBA/gray-alpha/palette),
-  golden-pixel tested.
-- **JPEG** (``core/jpeg.py``: baseline T.81 — Huffman entropy decode,
-  IDCT, chroma upsampling), cross-validated both directions against
-  the JVM's ``javax.imageio``.
+- **Images** via ``decode_image``, dispatching on container magic:
+  PNG (``core/png.py``, all five scanline filters, golden-pixel
+  tested), baseline JPEG (``core/jpeg.py``, cross-validated both
+  directions against the JVM's ``javax.imageio``), GIF, BMP, TIFF and
+  WebP (``core/gif.py``, ``bmp.py``, ``tiff.py``, ``webp.py``).
 - **WAV** audio (``core/wav.py``: RIFF PCM, 8/16/24/32-bit).
-- **AVI/MJPEG** video (``core/avi.py``: RIFF walk → JPEG frames).
+- **Video**: AVI/MJPEG (``core/avi.py``: RIFF walk → JPEG frames),
+  animated GIF and multi-page TIFF via ``decode_video_frames``.
 - The deterministic **fake** image/video containers the older fixtures
   use remain accepted.
 
-Anything else decodes to an error row (quarantine semantics, mirroring
-the extraction kernel's parse_error lane).
+Every media lane (here and in ``imagehash``/``mediahash``) is one
+per-blob function on the shared ``map_blobs`` kernel, which owns the
+Arrow batch loop and the quarantine row: a blob that is null or does
+not decode becomes an error row (mirroring the extraction kernel's
+parse_error lane), never a task failure.  A new media kernel is one
+function ``content -> dict`` (or a list of dicts to flat-map) and an
+output schema.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator, NamedTuple
+from typing import (
+    Callable, Iterator, List, NamedTuple, Optional, Sequence, Union,
+)
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -147,48 +154,81 @@ def encode_image(img: DecodedImage) -> bytes:
     raise ValueError(f"unknown container {img.container}")
 
 
-def decode_backend(content: bytes):
-    """Back-compat 3-tuple view: (width, height, pixel bytes)."""
-    d = decode_image(content)
-    return d.width, d.height, d.pixels
+_PD_INT = {"integer": "Int32", "long": "Int64"}
 
 
-def _features_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for batch in batches:
-        out = {
-            "doc_id": [], "media_ref": [], "width": [], "height": [],
-            "channels": [], "n_bytes": [], "mean_byte": [],
-            "decode_error": [],
-        }
-        for row in batch.itertuples(index=False):
-            content = bytes(row.content)
-            out["doc_id"].append(row.doc_id)
-            out["media_ref"].append(row.media_ref)
-            out["n_bytes"].append(len(content))
-            try:
-                img = decode_image(content)
-                out["width"].append(img.width)
-                out["height"].append(img.height)
-                out["channels"].append(img.channels)
-                out["mean_byte"].append(
-                    float(sum(img.pixels)) / len(img.pixels)
-                    if img.pixels
-                    else 0.0
+def map_blobs(
+    df: DataFrame,
+    schema: T.StructType,
+    fn: Callable[..., Union[dict, List[dict]]],
+    keys: Sequence[str] = ("doc_id", "media_ref"),
+    content_col: str = "content",
+    arg_col: Optional[str] = None,
+) -> DataFrame:
+    """The one Arrow-batched kernel behind every media decode lane.
+
+    ``fn(blob)`` (``fn(blob, row[arg_col])`` when ``arg_col`` is set)
+    runs once per row and returns that row's computed fields as a dict,
+    or a list of dicts for a flat map (one output row each).  Every
+    output row carries its input row's ``keys`` columns unchanged, then
+    the rest of ``schema``; a field ``fn`` leaves out is null, and an
+    ``n_bytes`` field holds the blob's size (0 for a null blob).
+
+    ``bytes(content)`` and ``fn`` share one ``try``: a null blob or one
+    that raises becomes exactly one quarantine row (keys, computed
+    fields null, ``decode_error`` = ``str(e)``), never a task failure.
+    Integer fields travel as pandas nullable ints, so a 64-bit hash
+    never passes through a float64 column."""
+    keys = list(keys)
+    fields = [f for f in schema.fields if f.name not in keys]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            src, rows, sizes = [], [], []
+            args = batch[arg_col] if arg_col else [None] * len(batch)
+            for i, (blob, arg) in enumerate(zip(batch[content_col], args)):
+                n = 0
+                try:
+                    content = bytes(blob)
+                    n = len(content)
+                    got = fn(content) if arg_col is None else fn(content, arg)
+                    if isinstance(got, dict):
+                        got = [got]
+                except Exception as e:
+                    got = [{"decode_error": str(e)}]
+                src += [i] * len(got)
+                rows += got
+                sizes += [n] * len(got)
+            out = batch[keys].take(src).reset_index(drop=True)
+            for f in fields:
+                col = (
+                    sizes if f.name == "n_bytes"
+                    else [r.get(f.name) for r in rows]
                 )
-                out["decode_error"].append(None)
-            except Exception as e:
-                out["width"].append(None)
-                out["height"].append(None)
-                out["channels"].append(None)
-                out["mean_byte"].append(None)
-                out["decode_error"].append(str(e))
-        yield pd.DataFrame(out)
+                dtype = _PD_INT.get(f.dataType.typeName())
+                out[f.name] = pd.array(col, dtype=dtype) if dtype else col
+            yield out
+
+    return df.mapInPandas(kernel, schema=schema)
+
+
+def image_features(content: bytes) -> dict:
+    """Per-blob image features: geometry, channels, mean sample value."""
+    img = decode_image(content)
+    return {
+        "width": img.width,
+        "height": img.height,
+        "channels": img.channels,
+        "mean_byte": (
+            float(sum(img.pixels)) / len(img.pixels) if img.pixels else 0.0
+        ),
+    }
 
 
 def extract_media_features(media_df: DataFrame) -> DataFrame:
     """media table → per-blob feature rows (Arrow-batched; decode errors
     become quarantine rows, never task failures)."""
-    return media_df.mapInPandas(_features_kernel, schema=MEDIA_FEATURES_SCHEMA)
+    return map_blobs(media_df, MEDIA_FEATURES_SCHEMA, image_features)
 
 
 def media_from_spans(spans_df: DataFrame, media_store: DataFrame) -> DataFrame:
@@ -308,40 +348,27 @@ def _resize_pixels(img: DecodedImage, tw: int, th: int) -> bytes:
     return b"".join(rows)
 
 
+def resize_image(content: bytes, target_w: int, target_h: int) -> dict:
+    """Per-blob resize: decode → nearest-neighbor resample → re-encode
+    into the input's container."""
+    img = decode_image(content)
+    resized = DecodedImage(
+        img.container, target_w, target_h, img.channels,
+        _resize_pixels(img, target_w, target_h),
+    )
+    return {
+        "width": target_w, "height": target_h,
+        "content": encode_image(resized),
+    }
+
+
 def resize_images(media_df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Image resize as an Arrow-batched kernel: decode → resample →
     re-encode; bad blobs become quarantine rows (decode_error set)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "doc_id": [], "media_ref": [], "width": [], "height": [],
-                "content": [], "decode_error": [],
-            }
-            for row in batch.itertuples(index=False):
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                try:
-                    img = decode_image(bytes(row.content))
-                    resized = DecodedImage(
-                        img.container,
-                        target_w,
-                        target_h,
-                        img.channels,
-                        _resize_pixels(img, target_w, target_h),
-                    )
-                    out["width"].append(target_w)
-                    out["height"].append(target_h)
-                    out["content"].append(encode_image(resized))
-                    out["decode_error"].append(None)
-                except Exception as e:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["content"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema=RESIZED_SCHEMA)
+    return map_blobs(
+        media_df, RESIZED_SCHEMA,
+        lambda content: resize_image(content, target_w, target_h),
+    )
 
 
 def apply_orientation(img: DecodedImage, orientation: int) -> DecodedImage:
@@ -392,6 +419,26 @@ ORIENTED_FIELDS = [
 ]
 
 
+def orient_image(content: bytes) -> dict:
+    """Per-blob auto-orient: a JPEG whose EXIF orientation is 2–8 comes
+    back transformed, re-encoded and metadata-scrubbed; anything else
+    decodable passes through byte-identical."""
+    from ..core.exif import parse_exif, strip_jpeg_metadata
+
+    ori = None
+    if content.startswith(b"\xff\xd8"):
+        meta = parse_exif(content)
+        ori = meta["orientation"] if meta else None
+    img = decode_image(content)
+    if ori not in (None, 0, 1):
+        img = apply_orientation(img, ori)
+        content = strip_jpeg_metadata(encode_image(img))
+    return {
+        "orientation": ori, "width": img.width, "height": img.height,
+        "content": content,
+    }
+
+
 def auto_orient_images(media_df: DataFrame) -> DataFrame:
     """Normalize every JPEG to upright pixels: read the EXIF
     orientation tag, apply its transform, re-encode, and scrub the
@@ -402,57 +449,14 @@ def auto_orient_images(media_df: DataFrame) -> DataFrame:
     re-encode is lossy for JPEG (like every auto-orient that does not
     do lossless DCT-domain rotation) — geometry is exact, samples are
     within codec tolerance."""
-    from ..core.exif import parse_exif, strip_jpeg_metadata
-
     in_fields = {f.name: f for f in media_df.schema.fields}
     out_schema = T.StructType(
         [in_fields["doc_id"], in_fields["media_ref"]] + ORIENTED_FIELDS
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "doc_id": [], "media_ref": [], "orientation": [],
-                "width": [], "height": [], "content": [],
-                "decode_error": [],
-            }
-            for row in batch.itertuples(index=False):
-                content = bytes(row.content)
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                try:
-                    ori = None
-                    if content.startswith(b"\xff\xd8"):
-                        meta = parse_exif(content)
-                        ori = meta["orientation"] if meta else None
-                    if ori in (None, 0, 1):
-                        img = decode_image(content)
-                        out["orientation"].append(ori)
-                        out["width"].append(img.width)
-                        out["height"].append(img.height)
-                        out["content"].append(content)
-                    else:
-                        img = apply_orientation(
-                            decode_image(content), ori
-                        )
-                        out["orientation"].append(ori)
-                        out["width"].append(img.width)
-                        out["height"].append(img.height)
-                        out["content"].append(
-                            strip_jpeg_metadata(encode_image(img))
-                        )
-                    out["decode_error"].append(None)
-                except Exception as e:
-                    out["orientation"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["content"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return media_df.select(
-        "doc_id", "media_ref", "content"
-    ).mapInPandas(kernel, schema=out_schema)
+    return map_blobs(
+        media_df.select("doc_id", "media_ref", "content"),
+        out_schema, orient_image,
+    )
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -466,37 +470,22 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
+def frame_rows(content: bytes, every_k: int) -> List[dict]:
+    """Per-blob frame sampling: every k-th decoded frame as its own row."""
+    return [
+        {"frame_idx": i, "content": frame}
+        for i, frame in enumerate(decode_video_frames(content))
+        if i % every_k == 0
+    ]
+
+
 def sample_frames(media_df: DataFrame, every_k: int = 2) -> DataFrame:
     """Video frame sampling as a flat-mapping Arrow kernel: one input blob
     → every k-th frame as its own row (table-generating, like explode but
     over binary containers).  Decode failures yield one quarantine row."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "doc_id": [], "media_ref": [], "frame_idx": [],
-                "content": [], "decode_error": [],
-            }
-            for row in batch.itertuples(index=False):
-                try:
-                    frames = decode_video_frames(bytes(row.content))
-                    for i, frame in enumerate(frames):
-                        if i % every_k:
-                            continue
-                        out["doc_id"].append(row.doc_id)
-                        out["media_ref"].append(row.media_ref)
-                        out["frame_idx"].append(i)
-                        out["content"].append(frame)
-                        out["decode_error"].append(None)
-                except Exception as e:
-                    out["doc_id"].append(row.doc_id)
-                    out["media_ref"].append(row.media_ref)
-                    out["frame_idx"].append(None)
-                    out["content"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema=FRAMES_SCHEMA)
+    return map_blobs(
+        media_df, FRAMES_SCHEMA, lambda content: frame_rows(content, every_k)
+    )
 
 
 def media_context_pairs(
@@ -576,48 +565,31 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def audio_features(content: bytes) -> dict:
+    """Per-blob WAV features: layout, duration, RMS loudness, peak."""
+    import numpy as np
+
+    from ..core.wav import decode_wav, samples_float
+
+    a = decode_wav(content)
+    x = samples_float(a)
+    return {
+        "sample_rate": a.sample_rate,
+        "channels": a.channels,
+        "bits_per_sample": a.bits_per_sample,
+        "n_frames": a.n_frames,
+        "duration_sec": a.n_frames / a.sample_rate,
+        "rms": float(np.sqrt(np.mean(np.square(x)))) if x.size else 0.0,
+        "peak": float(np.max(np.abs(x))) if x.size else 0.0,
+    }
+
+
 def extract_audio_features(media_df: DataFrame) -> DataFrame:
     """Real audio decode lane: WAV/RIFF PCM blobs → per-clip features
     (layout, duration, RMS loudness, absolute peak — silence/clipping
     screens for audio corpus curation).  Arrow-batched ``mapInPandas``
     with quarantine rows, same discipline as the image kernels."""
-    from ..core.wav import decode_wav, samples_float
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in batches:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA.fields}
-            for row in batch.itertuples(index=False):
-                content = bytes(row.content)
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                out["n_bytes"].append(len(content))
-                try:
-                    a = decode_wav(content)
-                    x = samples_float(a)
-                    out["sample_rate"].append(a.sample_rate)
-                    out["channels"].append(a.channels)
-                    out["bits_per_sample"].append(a.bits_per_sample)
-                    out["n_frames"].append(a.n_frames)
-                    out["duration_sec"].append(a.n_frames / a.sample_rate)
-                    out["rms"].append(
-                        float(np.sqrt(np.mean(np.square(x)))) if x.size else 0.0
-                    )
-                    out["peak"].append(
-                        float(np.max(np.abs(x))) if x.size else 0.0
-                    )
-                    out["decode_error"].append(None)
-                except Exception as e:
-                    for k in (
-                        "sample_rate", "channels", "bits_per_sample",
-                        "n_frames", "duration_sec", "rms", "peak",
-                    ):
-                        out[k].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
+    return map_blobs(media_df, AUDIO_FEATURES_SCHEMA, audio_features)
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -635,40 +607,27 @@ VIDEO_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def video_features(content: bytes) -> dict:
+    """Per-blob AVI features; the avih geometry must match frame 0."""
+    from ..core.avi import decode_avi
+
+    v = decode_avi(content)
+    if v.frames:
+        img = decode_image(v.frames[0])
+        if (img.width, img.height) != (v.width, v.height):
+            raise ValueError("avih geometry disagrees with frame 0")
+    return {
+        "width": v.width,
+        "height": v.height,
+        "fps": v.fps,
+        "n_frames": len(v.frames),
+        "duration_sec": v.duration_sec,
+    }
+
+
 def extract_video_features(media_df: DataFrame) -> DataFrame:
     """Real video decode lane: AVI/MJPEG blobs → stream geometry, frame
     rate, duration.  The header claims are VERIFIED against the first
     frame (decoded through the JPEG codec) so a lying avih cannot pass
     as healthy.  Arrow-batched, quarantine rows on failure."""
-    from ..core.avi import decode_avi
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in VIDEO_FEATURES_SCHEMA.fields}
-            for row in batch.itertuples(index=False):
-                content = bytes(row.content)
-                out["doc_id"].append(row.doc_id)
-                out["media_ref"].append(row.media_ref)
-                out["n_bytes"].append(len(content))
-                try:
-                    v = decode_avi(content)
-                    if v.frames:
-                        img = decode_image(v.frames[0])
-                        if (img.width, img.height) != (v.width, v.height):
-                            raise ValueError(
-                                "avih geometry disagrees with frame 0"
-                            )
-                    out["width"].append(v.width)
-                    out["height"].append(v.height)
-                    out["fps"].append(v.fps)
-                    out["n_frames"].append(len(v.frames))
-                    out["duration_sec"].append(v.duration_sec)
-                    out["decode_error"].append(None)
-                except Exception as e:
-                    for k in ("width", "height", "fps", "n_frames",
-                              "duration_sec"):
-                        out[k].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, schema=VIDEO_FEATURES_SCHEMA)
+    return map_blobs(media_df, VIDEO_FEATURES_SCHEMA, video_features)

@@ -337,9 +337,9 @@ def test_resize_and_frame_sampling(spark):
     resized = {r["media_ref"]: r for r in M.resize_images(df, 2, 2).collect()}
     ok = resized["img/a"]
     assert (ok["width"], ok["height"]) == (2, 2)
-    w, h, payload = M.decode_backend(bytes(ok["content"]))
-    assert (w, h) == (2, 2)
-    assert list(payload) == [0, 2, 8, 10]  # nearest-neighbor picks
+    got = M.decode_image(bytes(ok["content"]))
+    assert (got.width, got.height) == (2, 2)
+    assert list(got.pixels) == [0, 2, 8, 10]  # nearest-neighbor picks
     assert resized["img/bad"]["decode_error"] is not None
 
     frames = [M.encode_fake_image(2, 1, bytes([i, i])) for i in range(5)]

@@ -151,8 +151,10 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 def test_stream_media_features_matches_batch(spark, tmp_path):
     """Streaming multimodal twin: the file-source stream through the
     real-codec kernel produces exactly the batch operator's rows
-    (including the quarantine row), and a second availableNow run over
-    the same checkpoint emits nothing new (exactly-once)."""
+    (including the quarantine rows of a junk and a null blob — a file
+    source reads MEDIA_SCHEMA's content as nullable), and a second
+    availableNow run over the same checkpoint emits nothing new
+    (exactly-once)."""
     import numpy as np
 
     from machine_readability_checker_spark.core.jpeg import encode_jpeg
@@ -171,9 +173,13 @@ def test_stream_media_features_matches_batch(spark, tmp_path):
     rows = [
         ("m1", "a.jpg", "image", bytearray(encode_jpeg(8, 8, 3, rgb.tobytes()))),
         ("m2", "bad.bin", "image", bytearray(b"not an image")),
+        ("m3", "null.bin", "image", None),
     ]
-    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    df.coalesce(1).write.mode("append").parquet(in_dir)
+    spark.createDataFrame(
+        rows, "doc_id string, media_ref string, media_type string,"
+        " content binary",
+    ).coalesce(1).write.mode("append").parquet(in_dir)
+    df = spark.read.schema(MEDIA_SCHEMA).parquet(in_dir)
 
     q = stream_media_features(spark, in_dir, out_dir, ckpt)
     q.awaitTermination(120)
@@ -182,9 +188,12 @@ def test_stream_media_features_matches_batch(spark, tmp_path):
         r["media_ref"]: r for r in spark.read.parquet(out_dir).collect()
     }
     want = {r["media_ref"]: r for r in extract_media_features(df).collect()}
-    assert set(got) == set(want) == {"a.jpg", "bad.bin"}
+    assert set(got) == set(want) == {"a.jpg", "bad.bin", "null.bin"}
+    assert got == want
     assert got["a.jpg"]["width"] == want["a.jpg"]["width"] == 8
     assert got["bad.bin"]["decode_error"] is not None
+    assert got["null.bin"]["decode_error"] is not None
+    assert got["null.bin"]["width"] is None
 
     n1 = spark.read.parquet(out_dir).count()
     q2 = stream_media_features(spark, in_dir, out_dir, ckpt)
