@@ -6197,6 +6197,7 @@ def q_takedown_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from machine_readability_checker_spark.operators.repartition import (
         split_id,
     )
+    from machine_readability_checker_spark.plans.manifest import split_rows
     from machine_readability_checker_spark.sources.iceberg_table import (
         IcebergLayoutTable,
         TableMaintenance,
@@ -6210,9 +6211,8 @@ def q_takedown_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.repartition("split").write.partitionBy("split").mode(
         "overwrite"
     ).parquet(table.store.data_dir)
-    counts = df.groupBy("split").agg(F.count("*").alias("n")).collect()
-    for r in sorted(counts, key=lambda r: r["split"]):
-        table.store.commit_split(int(r["split"]), {"docs": int(r["n"])})
+    for split, rows in split_rows(table.store.data_dir).items():
+        table.store.commit_split(split, {"docs": rows})
     table.commit_snapshot()
     table.delete_where(spark, F.col("doc_id") % 7 == 0, key_col="doc_id")
     maint = TableMaintenance(table)

@@ -45,6 +45,7 @@ from machine_readability_checker_spark.operators import (  # noqa: E402
 from machine_readability_checker_spark.operators.repartition import (  # noqa: E402
     split_id,
 )
+from machine_readability_checker_spark.plans.manifest import split_rows  # noqa: E402
 from machine_readability_checker_spark.session import get_spark  # noqa: E402
 from machine_readability_checker_spark.sources.iceberg_table import (  # noqa: E402
     IcebergLayoutTable,
@@ -75,8 +76,8 @@ def _gen_demo(spark, table: IcebergLayoutTable, n: int, args) -> None:
     docs.repartition("split").write.partitionBy("split").mode(
         "overwrite"
     ).parquet(table.store.data_dir)
-    for r in docs.groupBy("split").agg(F.count("*").alias("c")).collect():
-        table.store.commit_split(int(r["split"]), {"docs": int(r["c"])})
+    for split, rows in split_rows(table.store.data_dir).items():
+        table.store.commit_split(split, {"docs": rows})
     table.commit_snapshot(schema_json='{"doc_id":"string"}')
     text = spark.read.parquet(table.store.data_dir)
     if args.minhash_index:

@@ -21,6 +21,12 @@ This package re-expresses all of that Spark-first:
 - the single-node pandas core doubles as the correctness oracle: the Spark
   kernel imports the exact same functions the tests call directly, so
   span-sequence equality is checked against one shared implementation.
+
+Importing the package also makes zip-archive import caches invalidate
+lazily on Python < 3.13 (``_zipimport``), which removes a fixed stall
+from every Python task of a reused Spark worker.
 """
+
+from . import _zipimport  # noqa: F401
 
 __version__ = "0.1.0"

@@ -11,8 +11,9 @@ is the batch-native design (no streaming state store):
    ``out/data/split=K/`` (a directory per split, Hive/Iceberg-partition
    layout) — within a wave Spark parallelizes freely;
 3. after a wave's write succeeds, one manifest JSON per split is committed
-   via write-temp + ``os.rename`` (atomic on POSIX) recording doc/span
-   counts — the commit point;
+   via write-temp + ``os.rename`` (atomic on POSIX) recording the split's
+   doc count, read from the footers of the parquet files just written
+   (``parquet_rows``) — the commit point;
 4. on restart, committed split ids are read back and the input is
    filtered with an anti-semijoin on ``split`` BEFORE any parsing, so
    completed work is pruned at the scan (partition pruning does this for
@@ -31,11 +32,50 @@ import os
 import tempfile
 import time
 from dataclasses import dataclass
-from typing import Callable, List, Optional
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.repartition import DEFAULT_SALT, split_id
+
+
+def parquet_files(path: str) -> List[str]:
+    """The data files Spark's parquet reader reads in the directory
+    ``path``: names ending in ``.parquet``, minus the hidden names it
+    skips (``_SUCCESS``, ``.crc`` checksums, anything starting with
+    ``_`` or ``.``).  A missing directory has none."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, name)
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith(("_", "."))
+    )
+
+
+def parquet_rows(path: str) -> int:
+    """Rows in the directory ``path`` as ``spark.read.parquet(path)
+    .count()`` counts them, summed from the parquet footers: no Spark
+    job, no data page read.  A missing directory counts 0."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
+
+
+def split_rows(data_dir: str) -> Dict[int, int]:
+    """{split: rows} for every ``split=K`` directory under
+    ``data_dir`` (a table written with ``partitionBy("split")``), in
+    split order."""
+    if not os.path.isdir(data_dir):
+        return {}
+    splits = sorted(
+        int(name[len("split="):])
+        for name in os.listdir(data_dir)
+        if name.startswith("split=") and name[len("split="):].isdigit()
+    )
+    return {
+        s: parquet_rows(os.path.join(data_dir, f"split={s}")) for s in splits
+    }
 
 
 @dataclass
@@ -98,11 +138,12 @@ def run_resumable(
     """Process ``df_raw`` through ``transform`` resumably.
 
     Returns stats {splits_total, splits_skipped, splits_processed,
-    docs_processed}.  Deterministic split assignment + atomic per-split
-    manifests ⇒ rerunning after a kill reprocesses only uncommitted
-    splits, and the final output directory is identical."""
-    import time as _time
-
+    docs_processed, wave_secs, wave_docs, steady_docs_per_sec}:
+    ``wave_secs``/``wave_docs`` hold one entry per wave run here, and
+    ``steady_docs_per_sec`` is the doc rate over the waves after the
+    first (None with fewer than two).  Deterministic split assignment +
+    atomic per-split manifests ⇒ rerunning after a kill reprocesses only
+    uncommitted splits, and the final output directory is identical."""
     if split_expr_col is not None:
         # partition-spec override (sources/iceberg_table.split_expr):
         # the caller supplies both the bucket expression and the split-id
@@ -165,7 +206,7 @@ def run_resumable(
         wave_size = max(1, len(todo))
     for wave_start in range(0, len(todo), wave_size):
         wave = todo[wave_start : wave_start + wave_size]
-        _tw = _time.time()
+        _tw = time.perf_counter()
         wave_df = df.filter(F.col("split").isin(wave))
         out = transform(wave_df)
         # one write per wave, partitioned by split → per-split directories.
@@ -180,27 +221,17 @@ def run_resumable(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(store.data_dir)
         )
-        # derive per-split commit stats from the *written* data (read-back
-        # counts are the exactly-once source of truth).  Only the `split`
-        # partition column is touched — column pruning keeps this a
-        # metadata-cheap scan even when the span payload is huge.
-        spark = df_raw.sparkSession
-        written = spark.read.parquet(store.data_dir).filter(
-            F.col("split").isin(wave)
-        )
-        stats = {
-            int(r["split"]): int(r["docs"])
-            for r in written.groupBy("split")
-            .agg(F.count("*").alias("docs"))
-            .collect()
-        }
+        # commit each split with the row count of the files the dynamic-
+        # overwrite commit just installed in its directory, read from
+        # their parquet footers: the exactly-once source of truth
+        # without a second Spark job per wave
         this_wave_docs = 0
         for s in wave:
-            docs = stats.get(s, 0)
+            docs = parquet_rows(os.path.join(store.data_dir, f"split={s}"))
             store.commit_split(s, {"docs": docs})
             docs_processed += docs
             this_wave_docs += docs
-        wave_secs.append(round(_time.time() - _tw, 3))
+        wave_secs.append(round(time.perf_counter() - _tw, 3))
         wave_docs.append(this_wave_docs)
         if on_wave_done is not None:
             on_wave_done(wave)

@@ -52,7 +52,7 @@ import tempfile
 import time
 from typing import Any, Dict, List, Optional
 
-from ..plans.manifest import ManifestStore
+from ..plans.manifest import ManifestStore, parquet_files, parquet_rows
 
 # split-id stride between partition specs: split = spec_id*STRIDE + bucket
 SPEC_STRIDE = 1000
@@ -261,7 +261,7 @@ class IcebergLayoutTable:
         tmp = os.path.join(self.delete_dir, f"d{did}.inprogress")
         os.makedirs(self.delete_dir, exist_ok=True)
         keys.coalesce(1).write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
+        n = parquet_rows(tmp)
         os.rename(tmp, final)
         snap = self.commit_snapshot(
             deletes=prev + [{"id": did, "key": key_col, "rows": n}]
@@ -298,14 +298,6 @@ class IcebergLayoutTable:
 
 
 # ----------------------------------------------------- table maintenance
-
-
-def _parquet_files(split_dir: str) -> List[str]:
-    return sorted(
-        os.path.join(split_dir, f)
-        for f in os.listdir(split_dir)
-        if f.endswith(".parquet")
-    )
 
 
 class TableMaintenance:
@@ -357,11 +349,11 @@ class TableMaintenance:
             split_dir = os.path.join(store.data_dir, f"split={split}")
             if not os.path.isdir(split_dir):
                 continue
-            files = _parquet_files(split_dir)
+            files = parquet_files(split_dir)
             if len(files) <= max_files_per_split and not sort_by:
                 continue
             df = spark.read.parquet(split_dir)
-            n_before = df.count()
+            n_before = parquet_rows(split_dir)
             tmp = split_dir + ".compact.tmp"
             out = df.coalesce(max_files_per_split)
             if sort_by:
@@ -371,7 +363,7 @@ class TableMaintenance:
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
-            n_after = spark.read.parquet(tmp).count()
+            n_after = parquet_rows(tmp)
             if n_after != n_before:
                 raise RuntimeError(
                     f"compaction row-count mismatch for split {split}: "
@@ -385,7 +377,7 @@ class TableMaintenance:
             shutil.rmtree(old)
             stats[split] = {
                 "files_before": len(files),
-                "files_after": len(_parquet_files(split_dir)),
+                "files_after": len(parquet_files(split_dir)),
                 "rows": n_before,
             }
         return stats
@@ -466,13 +458,13 @@ class TableMaintenance:
                 if not os.path.isdir(split_dir):
                     continue
                 df = spark.read.parquet(split_dir)
-                n_before = df.count()
+                n_before = parquet_rows(split_dir)
                 kept = df.join(F.broadcast(drop), key, "left_anti")
                 tmp = split_dir + ".compact.tmp"
                 kept.coalesce(
-                    max(1, len(_parquet_files(split_dir)))
+                    max(1, len(parquet_files(split_dir)))
                 ).write.mode("overwrite").parquet(tmp)
-                n_after = spark.read.parquet(tmp).count()
+                n_after = parquet_rows(tmp)
                 if n_after > n_before:
                     raise RuntimeError(
                         f"purge row-count grew for split {split}"

@@ -66,7 +66,7 @@ def stream_extract_to_table(
 
     from pyspark.sql import functions as F
 
-    from ..plans.manifest import ManifestStore
+    from ..plans.manifest import ManifestStore, parquet_rows
 
     store = ManifestStore(table_root)
 
@@ -76,11 +76,11 @@ def stream_extract_to_table(
         )
         target = os.path.join(store.data_dir, f"split={int(batch_id)}")
         out.write.mode("overwrite").parquet(target)
-        # count from the committed output (footer metadata read, no data
-        # scan) instead of a separate count() job over the batch input —
+        # count from the committed output's parquet footers (no Spark
+        # job, no data scan) instead of a count() over the batch input —
         # that pre-count re-scanned every micro-batch's files, and the
         # manifest should record what was written, not what arrived
-        n = batch_df.sparkSession.read.parquet(target).count()
+        n = parquet_rows(target)
         store.commit_split(int(batch_id), {"docs": n, "source": "stream"})
 
     raw = (

@@ -17,7 +17,9 @@ from machine_readability_checker_spark.operators.repartition import (
 )
 from machine_readability_checker_spark.plans.manifest import (
     ManifestStore,
+    parquet_rows,
     run_resumable,
+    split_rows,
 )
 from machine_readability_checker_spark.sources.fixtures import gen_corpus
 
@@ -189,3 +191,52 @@ def test_incremental_from_version_zero_is_bootstrap(spark, tmp_path):
         == table.read(spark, version=cur).count()
         == 40
     )
+
+
+def test_footer_commit_matches_spark_readback(spark, tmp_path):
+    """Each manifest's ``docs`` comes from the parquet footers of its
+    split directory and equals Spark's read-back count of that split,
+    over several waves and several files per split; a split of the
+    universe that receives no rows commits 0."""
+    raw = spark.range(200).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id")
+    )
+    store = ManifestStore(str(tmp_path / "t"))
+    stats = run_resumable(
+        raw, store, lambda d: d.repartition(3),
+        wave_size=2,
+        split_expr_col=split_id("doc_id", 4),
+        split_universe=[0, 1, 2, 3, 9],
+    )
+    assert stats["docs_processed"] == 200
+    assert len(stats["wave_secs"]) == len(stats["wave_docs"]) == 3
+    assert sum(stats["wave_docs"]) == 200
+    assert store.committed_splits() == [0, 1, 2, 3, 9]
+    written = spark.read.parquet(store.data_dir)
+    counts = {
+        r["split"]: r["n"]
+        for r in written.groupBy("split").agg(F.count("*").alias("n")).collect()
+    }
+    assert set(counts) == {0, 1, 2, 3}
+    for s in store.committed_splits():
+        assert store.read_manifest(s)["docs"] == counts.get(s, 0)
+    assert split_rows(store.data_dir) == dict(sorted(counts.items()))
+
+
+def test_parquet_rows_skips_what_spark_skips(spark, tmp_path):
+    """``parquet_rows`` counts the files Spark's reader reads: ``_SUCCESS``,
+    the ``.crc`` checksums and a hidden ``.hidden.parquet`` (a valid
+    parquet file Spark ignores) do not count; a missing directory is 0."""
+    import shutil
+
+    target = str(tmp_path / "split=0")
+    spark.range(37).repartition(2).write.parquet(target)
+    names = os.listdir(target)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    part = next(n for n in names if n.endswith(".parquet"))
+    shutil.copy(os.path.join(target, part), os.path.join(target, ".hidden.parquet"))
+    with open(os.path.join(target, "_extra.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    assert parquet_rows(target) == spark.read.parquet(target).count() == 37
+    assert parquet_rows(str(tmp_path / "absent")) == 0
+    assert split_rows(str(tmp_path)) == {0: 37}
